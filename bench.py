@@ -79,29 +79,64 @@ HEADLINE = [
 ]
 
 
+# Machine stamp: BENCH_FULL_r14 holds the 8-core leg of a round whose
+# driver headline came from 32 cores, because records carried no core
+# count and the last writer won. Records are compared (retry baseline,
+# canary floors) and overwritten only between runs with the same stamp.
+STAMP_KEYS = ("cpus", "pyspark", "python")
+
+
+def run_stamp(spark) -> dict:
+    """This run's machine stamp: the session's core count
+    (defaultParallelism) and the pyspark and Python versions."""
+    import platform
+
+    import pyspark
+
+    return {
+        "cpus": spark.sparkContext.defaultParallelism,
+        "pyspark": pyspark.__version__,
+        "python": platform.python_version(),
+    }
+
+
+def record_stamp(rec: dict) -> dict | None:
+    """The machine stamp a record carries, or None for a record written
+    before records were stamped."""
+    stamp = {k: rec.get(k) for k in STAMP_KEYS}
+    return stamp if any(v is not None for v in stamp.values()) else None
+
+
 def write_full_record(out_path: pathlib.Path, sf: str, payload: dict) -> bool:
     """Persist the full per-query record — UNLESS a record already
     exists at a different scale factor (judge r06: an sf0.01
     driver-sim env leaked into a bench run and clobbered the
     committed sf0.1 record, breaking the round-over-round full-bench
-    diff). Returns True when written."""
+    diff) or with a different machine stamp (an 8-core leg must not
+    replace a 32-core record). Returns True when written."""
     # A record that cannot testify to its sf — unreadable, non-dict
     # JSON, or a dict without the key — is treated as ABSENT (replace
     # it), never as a permanent refusal (review r07: .get on a parsed
-    # non-dict raised AFTER the whole timed suite had run).
-    prior_sf = None
+    # non-dict raised AFTER the whole timed suite had run). An
+    # unstamped record likewise cannot testify to its machine.
+    prior: dict = {}
     if out_path.exists():
         try:
             loaded = json.loads(out_path.read_text())
         except (OSError, ValueError):
             loaded = None
-        if isinstance(loaded, dict) and loaded.get("sf") is not None:
-            prior_sf = str(loaded["sf"])
-    if prior_sf is not None and prior_sf != sf:
+        if isinstance(loaded, dict):
+            prior = loaded
+    clashes = []
+    if prior.get("sf") is not None and str(prior["sf"]) != sf:
+        clashes.append(f"existing sf={prior['sf']}, this run sf={sf}")
+    prior_stamp, stamp = record_stamp(prior), record_stamp(payload)
+    if prior_stamp is not None and prior_stamp != stamp:
+        clashes.append(f"existing stamp {prior_stamp}, this run {stamp}")
+    if clashes:
         print(
             f"bench: REFUSING to overwrite {out_path.name} "
-            f"(existing sf={prior_sf}, this run sf={sf}) — "
-            f"full timings kept on stdout only",
+            f"({'; '.join(clashes)}) — full timings not persisted",
             file=sys.stderr,
         )
         return False
@@ -168,18 +203,20 @@ def _git(repo: pathlib.Path, *args: str) -> str | None:
 
 
 def _qualifying_records(
-    repo: pathlib.Path, rno: int, sf: str
+    repo: pathlib.Path, rno: int, sf: str, stamp: dict | None = None
 ) -> list[tuple[int, dict]]:
     """COMMITTED BENCH_FULL_r{K}.json records with K < rno, a matching
-    scale factor and a queries dict, newest first. In a git repo the
-    content comes from `git show HEAD:<name>` over the `git ls-files`
-    set — an untracked leftover, a staged-but-uncommitted file, or
-    uncommitted modifications to a tracked record (e.g. an in-round
-    twin run overwriting the committed record) can never feed the
-    retry baseline or the canary floors, which are defined over
+    scale factor, a queries dict and exactly this machine ``stamp``,
+    newest first. A record written before stamping matches only
+    ``stamp=None``: it cannot say which core count it ran on. In a git
+    repo the content comes from `git show HEAD:<name>` over the `git
+    ls-files` set — an untracked leftover, a staged-but-uncommitted
+    file, or uncommitted modifications to a tracked record (e.g. an
+    in-round twin run overwriting the committed record) can never feed
+    the retry baseline or the canary floors, which are defined over
     committed history (ADVICE r11 + review r12). When git is
     unavailable — unit tests in a tmp dir — every readable
-    working-tree record qualifies."""
+    working-tree record is a candidate."""
     ls = _git(repo, "ls-files", "--", "BENCH_FULL_r*.json")
     tracked = (
         None
@@ -209,6 +246,7 @@ def _qualifying_records(
             and isinstance(loaded, dict)
             and str(loaded.get("sf")) == sf
             and isinstance(loaded.get("queries"), dict)
+            and record_stamp(loaded) == stamp
         ):
             recs.append((k, loaded))
     recs.sort(key=lambda kr: -kr[0])
@@ -225,7 +263,12 @@ def load_prior_record(repo: pathlib.Path, rno: int, sf: str) -> dict:
 
 
 def load_prior_records(
-    repo: pathlib.Path, rno: int, sf: str, *, lookback: int = RETRY_LOOKBACK
+    repo: pathlib.Path,
+    rno: int,
+    sf: str,
+    *,
+    lookback: int = RETRY_LOOKBACK,
+    stamp: dict | None = None,
 ) -> list[dict]:
     """The last ``lookback`` qualifying records, newest first — the
     canary-floor comparisons (window_degraded, normalized_headline)
@@ -234,7 +277,8 @@ def load_prior_records(
     single degraded prior record must not inflate the thresholds
     (ADVICE r11). main() scans once and derives everything from the
     returned list."""
-    return [rec for _, rec in _qualifying_records(repo, rno, sf)[:lookback]]
+    recs = _qualifying_records(repo, rno, sf, stamp)
+    return [rec for _, rec in recs[:lookback]]
 
 
 def baseline_from_records(records: list[dict]) -> dict[str, float]:
@@ -257,13 +301,18 @@ def baseline_from_records(records: list[dict]) -> dict[str, float]:
 
 
 def retry_baseline(
-    repo: pathlib.Path, rno: int, sf: str, *, lookback: int = RETRY_LOOKBACK
+    repo: pathlib.Path,
+    rno: int,
+    sf: str,
+    *,
+    lookback: int = RETRY_LOOKBACK,
+    stamp: dict | None = None,
 ) -> dict[str, float]:
     """baseline_from_records over the last ``lookback`` qualifying
     records (one-call convenience; main() derives the same from its
     single load_prior_records scan)."""
     return baseline_from_records(
-        load_prior_records(repo, rno, sf, lookback=lookback)
+        load_prior_records(repo, rno, sf, lookback=lookback, stamp=stamp)
     )
 
 
@@ -357,7 +406,8 @@ def normalized_headline(
 # task 2). The printed line is therefore capped: per-query retry stamps
 # and the full-suite dict live ONLY in the committed BENCH_FULL record
 # (which write_full_record persists with indent=0 before the line is
-# printed); stdout carries the contract keys, the headline per-query
+# printed; log_retries puts the stamps on stderr when no record is
+# written); stdout carries the contract keys, the headline per-query
 # dict, summary scalars, and counts. stdout_record() is pure so the
 # unit battery can pin the worst-case line size.
 STDOUT_LINE_BUDGET = 4096
@@ -365,14 +415,38 @@ STDOUT_LINE_BUDGET = 4096
 
 def retry_summary(retried: dict[str, dict]) -> dict:
     """Counts only — the per-query {first, retry/skipped/error} stamps
-    stay in the BENCH_FULL record, which is where adjudication reads
-    them anyway."""
+    go to the BENCH_FULL record, or to stderr (log_retries) when no
+    record is written, as in headline mode."""
     return {
         "n": len(retried),
         "kept_min": sum(1 for r in retried.values() if "retry" in r),
         "skipped": sum(1 for r in retried.values() if "skipped" in r),
         "errored": sum(1 for r in retried.values() if "error" in r),
     }
+
+
+def log_retries(
+    retried: dict[str, dict], canary: dict, persisted: bool
+) -> None:
+    """Account for the outlier retries on stderr. When no BENCH_FULL
+    record holds the per-query stamps — headline mode writes none, and
+    write_full_record may refuse — the whole ``retried`` dict is
+    printed as one JSON line, so the stamps are never lost."""
+    if not retried:
+        return
+    n_skipped = sum(1 for r in retried.values() if "skipped" in r)
+    n_err = sum(1 for r in retried.values() if "error" in r)
+    where = "under 'retries'" if persisted else "below"
+    print(
+        f"bench: adjudicated {len(retried)} queries >{RETRY_FACTOR}x "
+        f"their prior record (canary slowdown {canary.get('slowdown')}, "
+        f"window_degraded={canary.get('window_degraded')}; "
+        f"{n_skipped} budget-skipped, {n_err} errored), kept min; "
+        f"all readings stamped {where}",
+        file=sys.stderr,
+    )
+    if not persisted:
+        print(json.dumps({"retries": retried}, sort_keys=True), file=sys.stderr)
 
 
 def stdout_record(
@@ -616,7 +690,8 @@ def main() -> None:
 
     repo = pathlib.Path(__file__).resolve().parent
     rno = _entry._next_round()
-    prior_recs = load_prior_records(repo, rno, sf)  # ONE record scan
+    stamp = run_stamp(spark)
+    prior_recs = load_prior_records(repo, rno, sf, stamp=stamp)  # ONE scan
     prior = baseline_from_records(prior_recs)
     prior_env = os.environ.get("SPARK_GRAFT_BENCH_PRIOR")
     if prior_env:
@@ -644,17 +719,6 @@ def main() -> None:
     retried = apply_retries(
         _time_queries, retry_plan(full, prior), full, timings
     )
-    if retried:
-        n_skipped = sum(1 for r in retried.values() if "skipped" in r)
-        n_err = sum(1 for r in retried.values() if "error" in r)
-        print(
-            f"bench: adjudicated {len(retried)} queries >{RETRY_FACTOR}x "
-            f"their prior record (canary slowdown {canary['slowdown']}, "
-            f"window_degraded={canary['window_degraded']}; "
-            f"{n_skipped} budget-skipped, {n_err} errored), kept min; "
-            "all readings stamped under 'retries'",
-            file=sys.stderr,
-        )
 
     total = round(sum(timings.values()), 3)
     headline_norm = normalized_headline(total, canary, prior_recs)
@@ -664,16 +728,18 @@ def main() -> None:
     # like r05's profile_orders_columns drift were only auditable by
     # re-running (round-5 verdict task 3). Named for the round the
     # driver is about to record (max CORRECTNESS round + 1).
+    persisted = False
     if len(full) > len(timings):
         # Round discovery lives in ONE place: the driver contract's
         # CORRECTNESS scan (code-review r06 — a second glob+regex copy
         # here could silently diverge from the contract's naming);
         # repo/rno were computed once above, before the retry pass.
-        write_full_record(
+        persisted = write_full_record(
             repo / f"BENCH_FULL_r{rno:02d}.json",
             sf,
             {
                 "sf": sf,
+                **stamp,
                 "canary": canary,
                 "retries": retried,
                 "headline_suite_seconds": total,
@@ -682,6 +748,7 @@ def main() -> None:
                 "queries": full,
             },
         )
+    log_retries(retried, canary, persisted)
     # Shape + size rationale on stdout_record above (r12 verdict task
     # 2): full per-query detail is already persisted in BENCH_FULL.
     record = stdout_record(

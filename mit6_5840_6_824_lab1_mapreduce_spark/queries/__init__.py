@@ -29,10 +29,6 @@ from . import sketches  # noqa: E402,F401
 from . import profiling  # noqa: E402,F401
 from . import graph  # noqa: E402,F401
 from . import bpe  # noqa: E402,F401
+from . import curation  # noqa: E402,F401
 
-# STAGED (r08 candidates): registers into registry.STAGED, NOT
-# REGISTRY — invisible to the driver window until promotion.
-from . import staged  # noqa: E402,F401
-from .registry import STAGED
-
-__all__ = ["REGISTRY", "STAGED", "query"]
+__all__ = ["REGISTRY", "query"]

@@ -1,20 +1,19 @@
-r"""Round-8 additions, staged in r07 and PROMOTED in r08.
+"""Corpus-curation queries over ``documents``.
 
-These eight queries were built under the r07 seat discipline: full
-@query contract (Spark fn + DuckDB oracle + the battery in
-``tests/test_staged_queries.py``) but registered into
-``registry.STAGED`` so the fully-determined r07 correctness window
-stayed intact. ``CORRECTNESS_r07.json`` landed 50/50 green, freeing
-the window, so r08 flipped the decorators to ``@query`` — they now
-seat first as never-checked rows, exactly as planned.
+Twelve registered queries that decide or audit what a training corpus
+keeps:
 
-All eight are compositions of proven idioms (md5 ranks, exact ratios,
-block hashes, pack frames, gaps-and-islands windows) — no new
-operator modules, no new scan shapes. 100 TB posture is noted per
-query; the exchange audit / determinism sweep / degenerate sweep
-iterated these plans every round BEFORE promotion (they sweep
-``{**REGISTRY, **STAGED}``), including the six degenerate fixtures
-with the nulls lane UNpinned.
+- passage-level dedup: longest shared block run, per-URL keeper;
+- per-document text signals: repetition score, character entropy;
+- sampling and packing: reservoir sample, packing efficiency,
+  per-domain cap, shard skew;
+- corpus reports: quality-threshold curve, tokenizer vocabulary
+  overlap, similarity-graph degree, benchmark exposure.
+
+Each is a composition of idioms used elsewhere in the package (md5
+ranks, exact ratios, block hashes, pack frames, gaps-and-islands
+windows), with no new operator module or scan shape. The 100 TB
+posture is noted per query.
 """
 
 from __future__ import annotations
@@ -700,10 +699,8 @@ def corpus_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# r09 additions (staged in r08 under the same discipline as the
-# r07→r08 batch, PROMOTED in r09 once CORRECTNESS_r08.json landed
-# 50/50 green and freed the window — they seat first as
-# never-checked rows).
+# Corpus reports that reuse the similarity, decontamination and dedup
+# oracle fragments.
 # =====================================================================
 from ..operators import similarity as _S  # noqa: E402
 from .similarity import _BUCKETS_SQL, _COS_SQL, _PLANES, _PLANES_VALUES, _QUANT_SQL  # noqa: E402

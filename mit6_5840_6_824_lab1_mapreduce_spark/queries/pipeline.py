@@ -84,19 +84,11 @@ _PIPELINE_PREFIX = (
 )
 
 
-def _pipeline_frame(
-    spark: SparkSession,
-    sf_dir: str,
-    also_materialize: tuple[DataFrame, ...] = (),
-) -> DataFrame:
+def _pipeline_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, component, n_chars, verdict, quality_score, pred_lang)
     for every document — first matching drop reason wins, priority
     exact_dup > near_dup > low_quality > lang; `component` is the
-    near-dup cluster id the leakage-safe split keys on.
-
-    ``also_materialize``: extra CC-independent frames a caller wants
-    computed during the same overlap window as the annotate subtree
-    (training_export passes its lazily-checkpointed token counts)."""
+    near-dup cluster id the leakage-safe split keys on."""
     docs = table(spark, sf_dir, "documents")
     # ONE corpus scan for every per-document annotation (round-5
     # fusion): language and quality are stateless frame transforms
@@ -131,50 +123,10 @@ def _pipeline_frame(
         .over(Window.partitionBy(F.md5(F.col("text"))))
         .alias("keep_id"),
     )
-    # Overlap the annotate subtree with the CC loop (r13 optimization
-    # round, guide §2.6 "overlap independent jobs"): the MinHash→LSH→
-    # CC derivation below runs a SEQUENCE of driver-synchronous jobs
-    # (signature aggregate, band join, per-round propagate + scalar
-    # convergence counts) whose tails and job-launch gaps leave most
-    # cores idle, while the annotate subtree (quality + language
-    # regexes + the md5 keeper window) is a completely independent
-    # pass over the same corpus. Materialize it on a background
-    # thread so its tasks back-fill those gaps; the final verdict
-    # join then reads the already-computed rows. localCheckpoint
-    # holds only the NARROW verdict inputs (doc_id, n_chars,
-    # quality_score, pred_lang, keep_id — no text), bounded per-doc
-    # state of the same class as the CC loop's label checkpoints,
-    # freed with the RDD. A failed background materialization is
-    # harmless: lineage is only truncated on success, so the join
-    # recomputes (the thread's error is re-raised at join() to not
-    # mask real failures). FIFO scheduling keeps the CC loop's jobs
-    # first; the annotate tasks use what is left — exactly the
-    # back-fill the guide describes.
-    from pyspark import InheritableThread
-
-    hashed = hashed.localCheckpoint(eager=False)
-    boxed_err: list[BaseException] = []
-
-    def _materialize() -> None:
-        try:
-            spark.sparkContext.setJobDescription("pipeline: annotate overlap")
-            hashed.count()
-            for extra in also_materialize:
-                extra.count()
-        except BaseException as exc:  # noqa: BLE001 — re-raised on join
-            boxed_err.append(exc)
-
-    overlap = InheritableThread(target=_materialize)
-    overlap.start()
-    try:
-        # Shared cluster derivation (advisor r4): the SAME helper
-        # corpus_leakage_safe_split keys on, so the MinHash threshold
-        # and CC entry point cannot drift between cluster consumers.
-        cc = _minhash_components(spark, sf_dir)
-    finally:
-        overlap.join()
-    if boxed_err:
-        raise boxed_err[0]
+    # Shared cluster derivation (advisor r4): the SAME helper
+    # corpus_leakage_safe_split keys on, so the MinHash threshold and
+    # CC entry point cannot drift between cluster consumers.
+    cc = _minhash_components(spark, sf_dir)
     comp = cc.select(F.col("id").alias("doc_id"), "component")
     return (
         hashed.join(comp, "doc_id")
@@ -289,6 +241,11 @@ def pipeline_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     per stage: see pipeline_clean_corpus, corpus_leakage_safe_split,
     and corpus_pack_sequences — nothing new shuffles here beyond the
     doc_id-keyed joins between them."""
+    frame = _pipeline_frame(spark, sf_dir)
+    train = frame.where(
+        (F.col("verdict") == "keep")
+        & ~lsplit_is_holdout(F.col("component"))
+    ).select("doc_id", "component")
     docs = table(spark, sf_dir, "documents")
     # Tokenize BELOW the join, deliberately: counting tokens for
     # soon-dropped docs costs map-side CPU (~30-50% of the regexp
@@ -299,20 +256,12 @@ def pipeline_training_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ints is ~16 bytes/row vs kilobytes of text; the CPU trade is
     # the cheap side. (Round-6 review: the join-first variant looked
     # flat at sf0.1 only because AQE broadcast the small train side.)
-    # CC-independent like the annotate subtree, so it rides the same
-    # overlap window (r13, guide §2.6): narrow (doc_id, n_tokens)
-    # checkpoint, computed while the CC loop's scalar jobs run.
     d_tok = docs.select(
         "doc_id",
         F.size(F.regexp_extract_all("text", F.lit(TOKEN_RE), 0))
         .cast("long")
         .alias("n_tokens"),
-    ).localCheckpoint(eager=False)
-    frame = _pipeline_frame(spark, sf_dir, also_materialize=(d_tok,))
-    train = frame.where(
-        (F.col("verdict") == "keep")
-        & ~lsplit_is_holdout(F.col("component"))
-    ).select("doc_id", "component")
+    )
     packed = pack_sequences_frame(train.join(d_tok, "doc_id"))
     return packed.select(
         "doc_id", "component", "shard", "n_tokens", "seq_first", "seq_last"

@@ -17,35 +17,12 @@ class Entry:
 
 REGISTRY: dict[str, Entry] = {}
 
-# Implemented + oracle-parity-tested, but NOT driver-visible yet.
-# Registering a query mid-freshness-cycle costs a seat in the driver's
-# 50-row correctness window and pushes stale rows past the ≤2-round
-# target (round-6/7 seat discipline: hold registration until the cycle
-# completes). Entries here carry the full @query contract — same Entry
-# shape, same oracle-parity pytest battery — so promotion is a
-# one-word decorator flip when seats free up.
-STAGED: dict[str, Entry] = {}
-
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
-        if name in REGISTRY or name in STAGED:
+        if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
         REGISTRY[name] = Entry(name, fn, oracle)
-        return fn
-
-    return deco
-
-
-def staged_query(
-    name: str, oracle: str | None = None
-) -> Callable[[QueryFn], QueryFn]:
-    """@query, except the entry lands in STAGED instead of REGISTRY."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in REGISTRY or name in STAGED:
-            raise ValueError(f"duplicate query name {name!r}")
-        STAGED[name] = Entry(name, fn, oracle)
         return fn
 
     return deco

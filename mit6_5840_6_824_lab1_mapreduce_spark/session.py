@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -106,19 +106,23 @@ def local_rows_df(spark: SparkSession, rows, schema: str):
     broadcast or collect it).
 
     Supported cell types here: int/str (all the call sites need).
-    Empty input gets a JVM-pure empty relation (range(0) + typed null
-    casts — identical schema incl. nullability): even an EMPTY
-    ``createDataFrame([], schema)`` executes 32 empty Python-backed
-    partitions per action, measured ~0.43 s vs ~0.07 s for the range
-    form.
+    Empty input gets a JVM local relation built with the declared
+    schema, so every field keeps its type and nullability and the plan
+    is a ``LocalTableScan <empty>``: an EMPTY
+    ``createDataFrame([], schema)`` still executes one empty
+    Python-backed partition per core per action (count() on local[4],
+    4 vCPUs, median of 20: 358 ms vs 60 ms for the local relation).
     """
-    from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
     st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
     if not rows:
-        return spark.range(0).select(
-            *[F.lit(None).cast(f.dataType).alias(f.name) for f in st]
+        jss = spark._jsparkSession
+        return DataFrame(
+            jss.createDataFrame(
+                spark._jvm.java.util.ArrayList(), jss.parseDataType(st.json())
+            ),
+            spark,
         )
     import pandas as pd
 

@@ -463,3 +463,91 @@ def test_stdout_record_headline_mode_omits_optional_scalars():
     assert "headline_normalized" not in rec
     assert "retries" not in rec
     assert rec["sf"] == 0.01
+
+
+# ------------------------------------------- machine stamp (core count)
+
+
+def test_other_core_count_prior_never_used_as_baseline_or_floor(tmp_path):
+    """BENCH_FULL_r14 held the 8-core leg of a 32-core round: records
+    carried no core count, so retry baselines and canary floors mixed
+    machines. An 8-core prior (even the newest) and an unstamped
+    legacy record must never feed a 32-core run's retry baseline or
+    canary floor."""
+    import pathlib
+
+    from bench import (
+        load_prior_records,
+        normalized_headline,
+        retry_baseline,
+        window_degraded,
+    )
+
+    c32 = {"cpus": 32, "pyspark": "4.1.2", "python": "3.11.9"}
+    c8 = c32 | {"cpus": 8}
+
+    def w(k, stamp, q, floor):
+        rec = {"sf": "0.1", **stamp, "queries": {"q": q},
+               "canary": {"start": floor, "mid": floor, "end": floor}}
+        (tmp_path / f"BENCH_FULL_r{k:02d}.json").write_text(json.dumps(rec))
+
+    w(8, {}, 0.1, 0.05)       # legacy, unstamped: machine unknown
+    w(9, c32, 4.0, 0.20)
+    w(10, c8, 9.0, 0.60)      # newest, but the 8-core leg
+    repo = pathlib.Path(tmp_path)
+    assert retry_baseline(repo, 11, "0.1", stamp=c32) == {"q": 4.0}
+    assert retry_baseline(repo, 11, "0.1", stamp=c8) == {"q": 9.0}
+    recs = load_prior_records(repo, 11, "0.1", stamp=c32)
+    assert [r["cpus"] for r in recs] == [32]
+    # Canary floor = 0.20 from the 32-core record only: a 32-core
+    # session at 0.21 is not degraded (the legacy 0.05 floor would
+    # flag it) and the normalized headline scales by 0.20 / 0.21.
+    here = {"slowdown": 1.0, "start": 0.21, "mid": 0.21, "end": 0.21}
+    assert not window_degraded(here, recs)
+    assert normalized_headline(21.0, here, recs) == 20.0
+    # A different pyspark or Python version is a different machine too.
+    assert retry_baseline(
+        repo, 11, "0.1", stamp=c32 | {"pyspark": "4.0.0"}) == {}
+
+
+def test_refuses_cross_stamp_overwrite(tmp_path, capsys):
+    """An 8-core run never replaces a 32-core record at the same sf;
+    an unstamped legacy record cannot testify to its machine and is
+    replaced, like one without an sf."""
+    from bench import record_stamp
+
+    c32 = {"cpus": 32, "pyspark": "4.1.2", "python": "3.11.9"}
+    p = tmp_path / "BENCH_FULL_r99.json"
+    assert write_full_record(p, "0.1", _payload("0.1"))  # legacy shape
+    assert write_full_record(p, "0.1", _payload("0.1") | c32)
+    assert not write_full_record(p, "0.1", _payload("0.1") | c32 | {"cpus": 8})
+    assert record_stamp(json.loads(p.read_text())) == c32  # untouched
+    assert "REFUSING" in capsys.readouterr().err
+    assert write_full_record(p, "0.1", _payload("0.1") | c32)
+
+
+def test_headline_mode_retry_stamps_go_to_stderr(capsys):
+    """Headline mode writes no BENCH_FULL record, so the per-query
+    retry stamps would be persisted nowhere: log_retries prints the
+    whole dict to stderr, while the stdout line keeps counts only and
+    stays under budget."""
+    import bench
+    from bench import STDOUT_LINE_BUDGET, log_retries, stdout_record
+
+    canary = {"start": 0.1, "slowdown": 1.0, "window_degraded": False}
+    retried = {n: {"first": 9999.999, "retry": 9999.999}
+               for n in bench.HEADLINE}
+    retried[bench.HEADLINE[0]] = {"first": 9.0, "error": "RuntimeError: x"}
+    log_retries(retried, canary, persisted=False)
+    err = capsys.readouterr().err.strip().splitlines()
+    assert json.loads(err[-1]) == {"retries": retried}
+    line = json.dumps(stdout_record(
+        {n: 9999.999 for n in bench.HEADLINE}, "0.1", canary, retried))
+    assert len(line) < STDOUT_LINE_BUDGET, len(line)
+    assert "first" not in line
+    # With a record written, stderr carries the one summary line only.
+    log_retries(retried, canary, persisted=True)
+    err = capsys.readouterr().err.strip().splitlines()
+    assert len(err) == 1 and "under 'retries'" in err[0]
+    log_retries({}, canary, persisted=False)
+    assert capsys.readouterr().err == ""

@@ -215,10 +215,10 @@ def test_duckdb_double_division_by_zero_yields_null():
 
 def test_local_rows_df_matches_create_dataframe(spark):
     """r13: local literal frames are built via Arrow (non-empty) or a
-    JVM range(0) projection (empty) so no action launches per-core
+    JVM local relation (empty) so no action launches per-core
     Python-backed partitions — values, schema, and nullability must be
     indistinguishable from the classic createDataFrame path."""
-    from pyspark.sql import functions as F
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from mit6_5840_6_824_lab1_mapreduce_spark.session import local_rows_df
 
@@ -244,3 +244,15 @@ def test_local_rows_df_matches_create_dataframe(spark):
     # StructType schema accepted too (upsert passes updates.schema)
     e2 = local_rows_df(spark, [], ec.schema)
     assert e2.schema == ec.schema
+    # A non-nullable field stays non-nullable on the empty path too
+    # (upsert's first batch passes its updates' schema as is).
+    strict = StructType([
+        StructField("id", LongType(), nullable=False),
+        StructField("v", StringType()),
+    ])
+    e3 = local_rows_df(spark, [], strict)
+    assert e3.schema == spark.createDataFrame([], strict).schema == strict
+    assert e3.count() == 0
+    assert "LocalTableScan <empty>" in (
+        e3._jdf.queryExecution().executedPlan().toString()
+    )

@@ -132,8 +132,13 @@ def test_pagerank_zero_iterations_materialized_before_unpersist(spark):
         [Row(src=1, dst=2, weight=3), Row(src=2, dst=1, weight=1)]
     )
     out = weighted_pagerank(edges, n_iter=0)
-    # The returned plan must already be a materialized checkpoint
-    # (ExistingRDD/LogicalRDD scan), not the live adjacency lineage.
-    assert "parquet" not in out._jdf.queryExecution().executedPlan().toString().lower()
+    # The returned frame's leaf must be an already-materialized
+    # checkpoint. The plan string reads ExistingRDD for an eager and a
+    # lazy checkpoint alike, so ask the leaf RDD itself.
+    leaf = out._jdf.queryExecution().analyzed()
+    while leaf.children().size() > 0:
+        leaf = leaf.children().head()
+    assert leaf.nodeName() == "LogicalRDD"
+    assert leaf.rdd().isCheckpointed()
     assert {(r.node, r.rank_scaled) for r in out.collect()} == {
         (1, 1_000_000), (2, 1_000_000)}

@@ -1,5 +1,5 @@
 """Battery for the eight queries staged in r07 and promoted to the
-registry in r08 (queries/staged.py): full oracle parity at both
+registry in r08 (queries/curation.py): full oracle parity at both
 fixture scales, the degenerate-input fixtures the registry sweep
 uses, and structural invariants the parity compare can't see (it
 proves Spark ≡ DuckDB, not that either meets the contract). The
@@ -13,8 +13,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY, STAGED
-from mit6_5840_6_824_lab1_mapreduce_spark.queries.staged import (
+from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY
+from mit6_5840_6_824_lab1_mapreduce_spark.queries.curation import (
     PACK_BUDGET,
     PASSAGE_BLOCK,
     RESERVOIR_K,
@@ -55,12 +55,10 @@ PROMOTED = [
 def test_promotion_complete():
     """r08 flipped all eight staged decorators to @query: every
     promoted name is registered with an oracle (no rows-only entries
-    slipped through the flip), and none lingers in STAGED (which now
-    holds only the r09 candidates — see test_r09_staging_rules)."""
+    slipped through the flip)."""
     for name in PROMOTED:
         assert name in REGISTRY, name
         assert REGISTRY[name].oracle, name
-        assert name not in STAGED, name
 
 
 # ------------------------------------------------------ oracle parity
@@ -341,7 +339,7 @@ def test_packing_efficiency_reconciles_with_pack_frame(spark):
 def test_quality_curve_monotone_and_reconciled(spark):
     """Raising the threshold can only shrink the kept set; every doc
     is either kept or dropped at each threshold; shares are valid."""
-    from mit6_5840_6_824_lab1_mapreduce_spark.queries.staged import (
+    from mit6_5840_6_824_lab1_mapreduce_spark.queries.curation import (
         QUALITY_THRESHOLDS_PCT,
         quality_threshold_curve,
     )
@@ -370,7 +368,7 @@ def test_domain_cap_matches_python_replay(spark):
     (md5('cap:'||id), id) order while cum-before < CAP."""
     import hashlib
 
-    from mit6_5840_6_824_lab1_mapreduce_spark.queries.staged import (
+    from mit6_5840_6_824_lab1_mapreduce_spark.queries.curation import (
         DOMAIN_CAP_TOKENS,
         corpus_domain_cap,
     )
@@ -403,19 +401,14 @@ PROMOTED_R09 = [
 
 def test_r09_promotion_complete():
     """r09 flipped the four r08-staged decorators to @query: every
-    name is registered with an oracle and driver-visible. STAGED
-    emptied at r09; r10 staged the three compressed-codec decode
-    queries (hold-at-155 policy) and r11 promoted them (registry
-    158) — STAGED is empty again, and anything lingering there is a
-    leak this pin catches (the r10 cohort's own battery is
-    tests/test_staged_r10.py)."""
+    name is registered with an oracle and driver-visible (the r10
+    cohort's own battery is tests/test_staged_r10.py)."""
     import __spark_entry__ as entry
 
     for name in PROMOTED_R09:
         assert name in REGISTRY, name
         assert REGISTRY[name].oracle, name
         assert name in entry.queries(), name
-    assert STAGED == {}
 
 
 @pytest.mark.parametrize("name", PROMOTED_R09)
@@ -439,7 +432,7 @@ def test_r09_staged_degenerate_parity(spark, name, degen_dir):
 def test_shard_skew_matches_python(spark):
     """Pure-Python replay of the shard accounting; the ratios ride the
     property-tested exact_ratio_wide idiom."""
-    from mit6_5840_6_824_lab1_mapreduce_spark.queries.staged import (
+    from mit6_5840_6_824_lab1_mapreduce_spark.queries.curation import (
         corpus_shard_skew,
     )
 
@@ -476,7 +469,7 @@ def test_vocab_overlap_matches_python(spark):
     in pure Python."""
     import re
 
-    from mit6_5840_6_824_lab1_mapreduce_spark.queries.staged import (
+    from mit6_5840_6_824_lab1_mapreduce_spark.queries.curation import (
         VOCAB_K,
         tokenizer_vocab_overlap,
     )
@@ -521,7 +514,7 @@ def test_graph_degree_reconciles_with_pair_table(spark):
     |populated vectors| — and degree-0 really means isolated."""
     from mit6_5840_6_824_lab1_mapreduce_spark.operators import similarity as S
     from mit6_5840_6_824_lab1_mapreduce_spark.queries.similarity import _PLANES
-    from mit6_5840_6_824_lab1_mapreduce_spark.queries.staged import (
+    from mit6_5840_6_824_lab1_mapreduce_spark.queries.curation import (
         similarity_graph_degree,
     )
 
@@ -541,7 +534,7 @@ def test_bench_exposure_covers_every_bench_doc(spark):
     from mit6_5840_6_824_lab1_mapreduce_spark.queries.decontam import (
         HOLDOUT_MOD,
     )
-    from mit6_5840_6_824_lab1_mapreduce_spark.queries.staged import (
+    from mit6_5840_6_824_lab1_mapreduce_spark.queries.curation import (
         decontam_bench_exposure,
     )
 

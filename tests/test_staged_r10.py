@@ -16,13 +16,13 @@ from __future__ import annotations
 
 import pytest
 
-from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY, STAGED
+from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY
 from tests.oracle_check import compare_query
 from tools.degenerate_sweep import write_fixture
 
 from .conftest import SF_CORRECT, SF_SMOKE
 
-STAGED_R10 = [
+PROMOTED_R10 = [
     "multimodal_png_decode",
     "multimodal_g711_decode",
     "multimodal_rle8_decode",
@@ -32,17 +32,16 @@ STAGED_R10 = [
 def test_r10_cohort_promoted():
     """r11 flipped the three r10-staged decorators to @query (r10
     verdict task 1): every name is registered with an oracle and
-    driver-visible, and none lingers in STAGED."""
+    driver-visible."""
     import __spark_entry__ as entry
 
-    for name in STAGED_R10:
+    for name in PROMOTED_R10:
         assert name in REGISTRY, name
-        assert name not in STAGED, name
         assert REGISTRY[name].oracle, name
         assert name in entry.queries(), name
 
 
-@pytest.mark.parametrize("name", STAGED_R10)
+@pytest.mark.parametrize("name", PROMOTED_R10)
 @pytest.mark.parametrize("sf_dir", [SF_CORRECT, SF_SMOKE])
 def test_staged_r10_oracle_parity(spark, name, sf_dir):
     e = REGISTRY[name]
@@ -60,7 +59,7 @@ def degen_dir(request, tmp_path_factory):
     )
 
 
-@pytest.mark.parametrize("name", STAGED_R10)
+@pytest.mark.parametrize("name", PROMOTED_R10)
 def test_staged_r10_degenerate_parity(spark, name, degen_dir):
     """Same adversarial fixtures as the registry-wide sweep — a
     promoted query diverging on them would fail the sweep, so it

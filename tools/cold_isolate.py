@@ -34,11 +34,11 @@ HERE = pathlib.Path(__file__).resolve().parent.parent
 _CHILD = r"""
 import sys, time
 sys.path.insert(0, {repo!r})
-from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY, STAGED
+from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY
 from mit6_5840_6_824_lab1_mapreduce_spark.session import get_spark
 
 name, sf = {name!r}, {sf!r}
-entry = {{**REGISTRY, **STAGED}}[name]
+entry = REGISTRY[name]
 spark = get_spark(app_name="cold-iso")
 spark.sparkContext.setLogLevel("ERROR")
 REGISTRY["tpch_q1_pricing_summary"].fn(spark, sf).count()

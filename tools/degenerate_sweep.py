@@ -545,15 +545,15 @@ def write_fixture(out_dir: str, kind: str) -> str:
 
 
 def sweep(fixtures: list[str], only: list[str] | None = None) -> int:
-    from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY, STAGED
+    from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY
     from mit6_5840_6_824_lab1_mapreduce_spark.session import get_spark
     from tests.oracle_check import compare_query
 
-    audited = {**REGISTRY, **STAGED}  # staged r08 candidates swept too
+    audited = REGISTRY
     if only:
         unknown = sorted(set(only) - set(audited))
         if unknown:
-            raise SystemExit(f"--only names not registered/staged: {unknown}")
+            raise SystemExit(f"--only names not registered: {unknown}")
         audited = {n: audited[n] for n in only}
 
     spark = get_spark(app_name="degenerate-sweep", master="local[8]", shuffle_partitions=8)

@@ -94,12 +94,9 @@ def classify(plan: str, nid: str, args: str) -> str:
 
 
 def main() -> int:
-    from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY, STAGED
+    from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY
     from mit6_5840_6_824_lab1_mapreduce_spark.session import get_spark
 
-    # Staged r08 candidates are audited alongside the registry so a
-    # scale regression is caught BEFORE promotion, not the round after.
-    audited = {**REGISTRY, **STAGED}
     spark = get_spark(app_name="exchange-audit", master="local[4]", shuffle_partitions=8)
     # Render the WORST-CASE plan: auto-broadcast off, so a join whose
     # small side happens to broadcast at sf0.01 shows the shuffle it
@@ -109,7 +106,7 @@ def main() -> int:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     counts = {"guard": 0, "semi-join": 0, "FLAGGED": 0, "embedding": 0}
     flagged: list[tuple[str, str, str, str]] = []
-    for name, entry in audited.items():
+    for name, entry in REGISTRY.items():
         plan = entry.fn(spark, SF)._jdf.queryExecution().explainString(mode)
         for nid, cols, args in _exchanges(plan):
             if re.search(r"\btext#", cols):
@@ -120,7 +117,7 @@ def main() -> int:
             elif re.search(r"\bembedding#", cols):
                 counts["embedding"] += 1
     print(
-        f"==== EXCHANGE AUDIT: {len(audited)} queries — text exchanges: "
+        f"==== EXCHANGE AUDIT: {len(REGISTRY)} queries — text exchanges: "
         f"{counts['guard']} guard, {counts['semi-join']} semi-join, "
         f"{counts['FLAGGED']} FLAGGED; embedding exchanges (info): "
         f"{counts['embedding']} ===="

@@ -69,15 +69,15 @@ QUERIES = [
     "tokenizer_bpe_merges",
     "events_sessionization",
     "multimodal_feature_extract",
-    # Round-7 staged flagship: the banded block-hash join + islands
-    # window is the only genuinely new scale shape in queries/staged.py
+    # Round-7 curation flagship: the banded block-hash join + islands
+    # window is the only genuinely new scale shape in queries/curation.py
     # (the other seven are per-row projections / single windows /
-    # bounded explodes). Resolved from {**REGISTRY, **STAGED}. The
-    # 10-clique replication makes every base doc's blocks collide
-    # across all 10 copies on full diagonals — a harder candidate
-    # density than natural growth, same caveat as the dedup family.
+    # bounded explodes). The 10-clique replication makes every base
+    # doc's blocks collide across all 10 copies on full diagonals — a
+    # harder candidate density than natural growth, same caveat as the
+    # dedup family.
     "dedup_substring_runs",
-    # Round-8 staged flagship: the degree profile joins the FULL
+    # Round-8 curation flagship: the degree profile joins the FULL
     # quantized vector table against the LSH pair graph's degree
     # aggregate (the other three r09 candidates are bounded-output
     # aggregates or ride already-smoked join shapes). The 10-clique
@@ -257,10 +257,9 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY, STAGED
+    from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY
     from mit6_5840_6_824_lab1_mapreduce_spark.session import get_spark
 
-    audited = {**REGISTRY, **STAGED}
     spark = get_spark(
         app_name="scale-smoke",
         extra_conf={
@@ -283,7 +282,7 @@ def main() -> None:
         return df.count()
 
     # Warm JVM/codegen the same way bench.py does.
-    force(audited["tpch_q1_pricing_summary"].fn(spark, str(SRC)))
+    force(REGISTRY["tpch_q1_pricing_summary"].fn(spark, str(SRC)))
 
     # Python worker pool warm, re-issued per query below (rationale +
     # measurements in session.warm_python_worker_pool): the factory
@@ -302,7 +301,7 @@ def main() -> None:
             warm_python_worker_pool(spark)
             r0, w0 = _shuffle_totals(spark)
             t0 = time.perf_counter()
-            rows = force(audited[name].fn(spark, sf_dir))
+            rows = force(REGISTRY[name].fn(spark, sf_dir))
             dt = time.perf_counter() - t0
             r1, w1 = _shuffle_totals(spark)
             results.setdefault(name, {})[sf_name] = {
