@@ -87,10 +87,16 @@ def run_job_combining(
     The reference ships one ``(word, "1")`` pair per occurrence with no
     combiner (wc.go:26-31); this is the Spark improvement that makes the
     same job viable at 100 TB (shuffle volume ∝ distinct keys, not
-    occurrences).
+    occurrences). Keys land in the same FNV-1a buckets as ``run_job``;
+    the map side combines first, so the hash runs once per distinct key
+    per map partition, not once per occurrence.
     """
     pairs = inputs.flatMap(lambda fc: map_fn(fc[0], fc[1]))
-    return pairs.reduceByKey(merge_fn, numPartitions=n_reduce)
+    return pairs.reduceByKey(
+        merge_fn,
+        numPartitions=n_reduce,
+        partitionFunc=lambda k: reduce_bucket(k, n_reduce),
+    )
 
 
 def run_sequential(

@@ -55,6 +55,9 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
+        # Every Python task forks from this daemon; it stops each task
+        # re-reading pyspark.zip and the Spark jar (worker_daemon.py).
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
@@ -72,8 +75,15 @@ def warm_python_worker_pool(spark: SparkSession) -> None:
     - A task whose plan chains TWO Python operators holds two workers
       at once, so such a query (multimodal_audio_decode's unfused
       build→parse pipeline) draws on a 2x-deep pool; priming only
-      one layer leaves its second stage to fork+import mid-query
-      (measured: 210 s blocked executor time vs 0.8 s CPU).
+      one layer leaves its second stage to fork+import mid-query.
+
+    Measured on local[4], 4 vCPUs, JVM already warm: the two-deep
+    job below on fresh workers takes 3.5-3.7 s wall and 11.7-12.3 s
+    of executor time against 0.7 s of CPU; on the primed pool it
+    takes 0.47-0.51 s. Without `worker_daemon` the primed job took
+    1.13-1.23 s: the 210 s of blocked time round 6 measured for
+    multimodal_audio_decode on local[32] also held every task's zip
+    re-read.
 
     If any query ever chains a THIRD Python stage, add a third
     `.mapInPandas` hop here."""
@@ -95,11 +105,14 @@ def local_rows_df(spark: SparkSession, rows, schema: str):
     execution (r13 optimization round, guide §4/§5).
 
     ``spark.createDataFrame(list, schema)`` parallelizes the pickled
-    rows into ``defaultParallelism`` Python-backed partitions, so the
-    first downstream action launches one Python worker round trip PER
-    CORE to deserialize a handful of rows — measured 0.5-2.8 s of
-    blocked executor time for a 16-row table on local[32] (32 tasks,
-    ~5 ms of CPU total). The pandas/Arrow path ships the same rows to
+    rows into ``defaultParallelism`` Python-backed partitions, so every
+    downstream action launches one Python worker round trip PER CORE
+    to deserialize a handful of rows. A 16-row table's collect() on
+    local[4], 4 vCPUs, median of 10: 166 ms wall and 216 ms of executor
+    time for 20 ms of CPU (4 tasks), against 80 ms and 2 ms here.
+    Without `worker_daemon` the same collect() took 404 ms and 1,052
+    ms: most of the 0.5-2.8 s r13 measured on local[32] was each
+    task's zip re-read. The pandas/Arrow path ships the same rows to
     the JVM as Arrow batches at CREATION time instead, so execution is
     a plain JVM scan; coalesce(1) collapses the per-batch slices (a
     loop-result table is at most a few hundred rows — consumers
@@ -111,7 +124,7 @@ def local_rows_df(spark: SparkSession, rows, schema: str):
     is a ``LocalTableScan <empty>``: an EMPTY
     ``createDataFrame([], schema)`` still executes one empty
     Python-backed partition per core per action (count() on local[4],
-    4 vCPUs, median of 20: 358 ms vs 60 ms for the local relation).
+    4 vCPUs, median of 10: 244 ms vs 109 ms for the local relation).
     """
     from pyspark.sql.types import StructType
 

@@ -256,3 +256,27 @@ def test_local_rows_df_matches_create_dataframe(spark):
     assert "LocalTableScan <empty>" in (
         e3._jdf.queryExecution().executedPlan().toString()
     )
+
+
+def test_python_tasks_fork_from_the_worker_daemon(spark):
+    """``get_spark`` runs Python tasks from the package's worker daemon,
+    so both an RDD task and an Arrow (mapInPandas) task see its
+    stamp-checked ``zipimporter.invalidate_caches``."""
+    import pandas as pd
+
+    def patched_by():
+        import zipimport
+
+        return zipimport.zipimporter.invalidate_caches.__module__
+
+    def rdd_task(rows):
+        yield patched_by()
+
+    def arrow_task(batches):
+        for _ in batches:
+            yield pd.DataFrame({"m": [patched_by()]})
+
+    daemon = "mit6_5840_6_824_lab1_mapreduce_spark.worker_daemon"
+    assert spark.sparkContext.parallelize([0], 1).mapPartitions(rdd_task).collect() == [daemon]
+    got = spark.range(1, numPartitions=1).mapInPandas(arrow_task, "m string").collect()
+    assert [r.m for r in got] == [daemon]

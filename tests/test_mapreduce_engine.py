@@ -4,6 +4,8 @@ src/main/test-mr.sh:77-108 — compare after external sort)."""
 
 from __future__ import annotations
 
+import pytest
+
 from mit6_5840_6_824_lab1_mapreduce_spark.functions.hashing import fnv1a32, reduce_bucket
 from mit6_5840_6_824_lab1_mapreduce_spark.operators import mrapps
 from mit6_5840_6_824_lab1_mapreduce_spark.operators.mapreduce import (
@@ -62,11 +64,17 @@ def test_combining_path_matches_wc(spark):
     assert got == _golden("wc")
 
 
-def test_bucket_layout_parity(spark):
+@pytest.mark.parametrize("engine", ["run_job", "run_job_combining"])
+def test_bucket_layout_parity(spark, engine):
     """Keys land in the FNV-1a bucket the reference would use
-    (mr-out-<r> layout parity, src/mr/worker.go:25-29,86-94)."""
+    (mr-out-<r> layout parity, src/mr/worker.go:25-29,86-94), on the
+    combining path too."""
     m, r = mrapps.APPS["wc"]
-    out = run_job(CORPUS, m, r, n_reduce=7, spark=spark)
+    if engine == "run_job":
+        out = run_job(CORPUS, m, r, n_reduce=7, spark=spark)
+    else:
+        rdd = spark.sparkContext.parallelize(CORPUS)
+        out = run_job_combining(rdd, m, lambda a, b: str(int(a) + int(b)), n_reduce=7)
     per_part = out.mapPartitionsWithIndex(
         lambda i, rows: [(i, k) for k, _ in rows]
     ).collect()
