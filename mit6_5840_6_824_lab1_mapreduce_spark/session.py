@@ -66,8 +66,8 @@ def get_spark(
 
 def warm_python_worker_pool(spark: SparkSession) -> None:
     """Prime the Python worker pool TWO-DEEP (round-6 measurement;
-    shared by bench.py and tools/scale_smoke.py so the invariant
-    cannot drift between them):
+    bench.warm_up and bench.reset call it for bench.py and every timing
+    tool in tools/, so the invariant cannot drift between them):
 
     - `PythonWorkerFactory` culls idle pooled workers after a
       HARDCODED 1 minute (no conf knob), and each re-fork pays the

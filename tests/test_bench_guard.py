@@ -5,7 +5,12 @@ and the round-over-round diff silently compared across scales."""
 
 from __future__ import annotations
 
+import ast
+import importlib
 import json
+import pathlib
+
+import pytest
 
 from bench import write_full_record
 
@@ -551,3 +556,65 @@ def test_headline_mode_retry_stamps_go_to_stderr(capsys):
     assert len(err) == 1 and "under 'retries'" in err[0]
     log_retries({}, canary, persisted=False)
     assert capsys.readouterr().err == ""
+
+
+# --------------------- one timing harness: bench.force/warm_up/reset
+
+
+REPO = pathlib.Path(__file__).resolve().parent.parent
+
+
+def test_force_evaluates_what_count_prunes(spark):
+    """count() never evaluates a projected column, so a column that
+    raises on every row still counts 10; bench.force folds every column
+    and must raise. This is why no timing tool may time count()."""
+    from pyspark.sql import functions as F
+
+    from bench import force
+
+    df = spark.range(10).select(
+        "id", F.when(F.col("id") >= 0, F.raise_error(F.lit("boom"))).alias("x")
+    )
+    assert df.count() == 10
+    with pytest.raises(Exception, match="boom"):
+        force(df)
+    assert force(spark.range(10))[0] == 10
+
+
+def _owners(needle: str) -> set[str]:
+    """``module.function`` for every line of bench.py and tools/*.py
+    containing ``needle``, named by its enclosing top-level function
+    (``<module>`` outside any). Text, not call nodes: a timing loop in
+    a child-process script string counts too."""
+    owners: set[str] = set()
+    for path in [REPO / "bench.py", *sorted((REPO / "tools").glob("*.py"))]:
+        src = path.read_text()
+        defs = [
+            (n.lineno, n.end_lineno, n.name)
+            for n in ast.parse(src).body
+            if isinstance(n, ast.FunctionDef)
+        ]
+        for i, line in enumerate(src.splitlines(), 1):
+            if needle in line:
+                name = next((d for a, b, d in defs if a <= i <= b), "<module>")
+                owners.add(f"{path.stem}.{name}")
+    return owners
+
+
+def test_one_forcing_fold_and_one_pool_warm():
+    assert _owners("xxhash64(") == {"bench.force"}
+    assert _owners("warm_python_worker_pool(") == {
+        "bench.warm_up",
+        "bench.reset",
+    }
+
+
+def test_timing_tools_import():
+    """Nothing else imports the timing tools, so a broken harness import
+    would otherwise pass tier-1. cold_isolate's child script must also
+    survive its str.format and compile."""
+    for tool in ("time_queries", "scale_smoke", "scale_verify"):
+        importlib.import_module(f"tools.{tool}")
+    cold = importlib.import_module("tools.cold_isolate")
+    child = cold._CHILD.format(repo=str(REPO), name="q", sf="d")
+    compile(child, "<cold_isolate child>", "exec")

@@ -7,9 +7,9 @@ r06 judge's 44 s sketch outlier cold-measured at 2.8-4.9 s, the r07
 dedup_embedding_cosine 3.73 s reading cold-measured at 2.3-2.9 s).
 Before treating a bench regression as real, re-measure it here: a
 FRESH process per run (JIT/cache state cannot leak between runs),
-the bench warmup discipline (one bench-scale scan for executor
-startup, one smoke-scale pass of the same query for codegen/JIT,
-then clearCache + GC), and N runs whose MINIMUM is the comparable
+bench.py's own warm-up, reset and forcing action (``bench.warm_up``
+with the query itself as the smoke-scale pass, then
+``bench.time_query``), and N runs whose MINIMUM is the comparable
 number (contention only ever adds time).
 
 Usage:
@@ -32,27 +32,17 @@ import sys
 HERE = pathlib.Path(__file__).resolve().parent.parent
 
 _CHILD = r"""
-import sys, time
+import sys
 sys.path.insert(0, {repo!r})
-from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY
+from bench import time_query, warm_up
 from mit6_5840_6_824_lab1_mapreduce_spark.session import get_spark
 
 name, sf = {name!r}, {sf!r}
-entry = REGISTRY[name]
 spark = get_spark(app_name="cold-iso")
 spark.sparkContext.setLogLevel("ERROR")
-REGISTRY["tpch_q1_pricing_summary"].fn(spark, sf).count()
-# Codegen/JIT warmup at the smallest sibling scale of the measured
-# dir (sfX.Y -> sf0.001 next to it); fall back to the measured dir
-# itself when no such sibling exists (non-standard layouts).
-import os
-warm = os.path.join(os.path.dirname(sf.rstrip("/")), "sf0.001")
-entry.fn(spark, warm if os.path.isdir(warm) else sf).count()
-spark.catalog.clearCache()
-import gc; gc.collect()
-t0 = time.monotonic()
-n = entry.fn(spark, sf).count()
-print(f"COLD {{name}}: {{time.monotonic()-t0:.3f}}s rows={{n}}")
+warm_up(spark, sf, [name])
+sec, rows = time_query(spark, name, sf)
+print(f"COLD {{name}}: {{sec:.3f}}s rows={{rows}}")
 spark.stop()
 """
 

@@ -22,21 +22,23 @@ natural 10x growth — completing inside the budget is a conservative
 pass for the dedup family. Dimensions (region/nation) keep reference
 cardinality, as they would at any real scale.
 
-Shuffle bytes come from the Spark UI REST API (status store), summed
-over the stages each query executes.
+Each query runs under its own job group; shuffle bytes are summed
+over that group's stages, read from the status store
+(``perfbench.layers.StageReader``) right after the query.
 """
 
 from __future__ import annotations
 
-import gc
 import json
 import pathlib
 import sys
-import time
-import urllib.request
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from bench import time_query, warm_up
+from mit6_5840_6_824_lab1_mapreduce_spark.session import get_spark
+from perfbench.layers import StageReader
 
 SRC = pathlib.Path("/root/testdata/sf0.1")
 DST = REPO / "scale_data" / "sf1.0"
@@ -230,23 +232,6 @@ def generate() -> None:
     con.close()
 
 
-def _rest(spark, path: str):
-    base = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{base}/api/v1/applications/{app}{path}") as r:
-        return json.load(r)
-
-
-def _shuffle_totals(spark) -> tuple[int, int]:
-    """(shuffle_read_bytes, shuffle_write_bytes) summed over all
-    completed stages so far."""
-    stages = _rest(spark, "/stages?status=complete")
-    return (
-        sum(s.get("shuffleReadBytes", 0) for s in stages),
-        sum(s.get("shuffleWriteBytes", 0) for s in stages),
-    )
-
-
 def main() -> None:
     # Sentinel is the LAST-written table, so an interrupted generation
     # (lineitem present, documents/embeddings missing) regenerates
@@ -255,63 +240,31 @@ def main() -> None:
         print(f"generating sf1.0 under {DST} ({COPIES}x sf0.1, key-shifted)")
         generate()
 
-    from pyspark.sql import functions as F
-
-    from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY
-    from mit6_5840_6_824_lab1_mapreduce_spark.session import get_spark
-
-    spark = get_spark(
-        app_name="scale-smoke",
-        extra_conf={
-            "spark.ui.enabled": "true",
-            # Shuffle deltas sum over ALL completed stages; if the
-            # status store evicted stages between the r0 and r1 reads
-            # (default retainedStages=1000, and the iterative CC/
-            # PageRank queries burn stages fast at sf1.0), deltas go
-            # negative/undercounted silently. Retain far more than a
-            # full run produces.
-            "spark.ui.retainedStages": "100000",
-            "spark.ui.retainedJobs": "100000",
-        },
-    )
+    spark = get_spark(app_name="scale-smoke")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def force(df) -> int:
-        h = df.select(F.xxhash64(*df.columns).alias("_h"))
-        h.agg(F.bit_xor("_h")).collect()
-        return df.count()
-
-    # Warm JVM/codegen the same way bench.py does.
-    force(REGISTRY["tpch_q1_pricing_summary"].fn(spark, str(SRC)))
-
-    # Python worker pool warm, re-issued per query below (rationale +
-    # measurements in session.warm_python_worker_pool): the factory
-    # culls idle pooled workers after a hardcoded 1 minute, so a query
-    # following a long JVM-only stretch would otherwise pay
-    # fork+pandas-import per core inside its timing window.
-    from mit6_5840_6_824_lab1_mapreduce_spark.session import (
-        warm_python_worker_pool,
-    )
+    warm_up(spark, str(SRC), [])
+    reader = StageReader(spark)
 
     results: dict[str, dict] = {}
     for sf_name, sf_dir in (("sf0.1", str(SRC)), ("sf1.0", str(DST))):
         for name in QUERIES:
-            spark.catalog.clearCache()
-            gc.collect()
-            warm_python_worker_pool(spark)
-            r0, w0 = _shuffle_totals(spark)
-            t0 = time.perf_counter()
-            rows = force(REGISTRY[name].fn(spark, sf_dir))
-            dt = time.perf_counter() - t0
-            r1, w1 = _shuffle_totals(spark)
+            # The group also holds time_query's untimed pool re-warm,
+            # whose shuffle (one partial count per core) is 236 bytes
+            # on local[4], below the 0.1 MB rounding.
+            group = f"scale-smoke:{sf_name}:{name}"
+            spark.sparkContext.setJobGroup(group, name)
+            dt, rows = time_query(spark, name, sf_dir)
+            stages = reader.read(group)
+            read_mb = stages["shuffle_read_bytes"] / 1e6
+            write_mb = stages["shuffle_write_bytes"] / 1e6
             results.setdefault(name, {})[sf_name] = {
                 "sec": round(dt, 2),
                 "rows": rows,
-                "shuffle_read_mb": round((r1 - r0) / 1e6, 1),
-                "shuffle_write_mb": round((w1 - w0) / 1e6, 1),
+                "shuffle_read_mb": round(read_mb, 1),
+                "shuffle_write_mb": round(write_mb, 1),
             }
             print(f"{sf_name} {name}: {dt:.1f}s rows={rows} "
-                  f"shufW={(w1 - w0) / 1e6:.1f}MB", flush=True)
+                  f"shufW={write_mb:.1f}MB", flush=True)
 
     print("\n| query | sf0.1 s | sf1.0 s | time x | sf0.1 shufW MB |"
           " sf1.0 shufW MB | shufW x | sf1.0 rows |")

@@ -46,7 +46,6 @@ Output: SCALE_VERIFY_r{N}.json, one row per query:
 
 from __future__ import annotations
 
-import gc
 import json
 import pathlib
 import sys
@@ -55,6 +54,8 @@ import time
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+from bench import reset
 
 SF_DIR = REPO / "scale_data" / "sf1.0"
 DEFAULT_TIMEOUT = 600.0
@@ -84,10 +85,7 @@ def main() -> None:
     from tests.oracle_check import _normalize, duckdb_connect
 
     from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY
-    from mit6_5840_6_824_lab1_mapreduce_spark.session import (
-        get_spark,
-        warm_python_worker_pool,
-    )
+    from mit6_5840_6_824_lab1_mapreduce_spark.session import get_spark
 
     timeout = float(_arg("--timeout", str(DEFAULT_TIMEOUT)))
     only = _arg("--only")
@@ -103,9 +101,7 @@ def main() -> None:
     n_green = n_red = n_timeout = n_err = 0
     for name in names:
         entry = REGISTRY[name]
-        spark.catalog.clearCache()  # rank persist contract (SCALE.md)
-        gc.collect()
-        warm_python_worker_pool(spark)
+        reset(spark)  # includes the rank persist contract (SCALE.md)
         row: dict = {}
         try:
             t0 = time.perf_counter()

@@ -1,27 +1,20 @@
-"""Bench-methodology timing for a list of registered queries: same
-forcing action (xxhash64/bit_xor over every column), same cache/GC
-hygiene, min of N reps. For A/B measurement during the optimization
-round (bench.py remains the round-record instrument).
+"""Bench-methodology timing for a list of registered queries: bench.py's
+own warm-up, between-query reset and forcing action, min of N reps.
+For A/B measurement during the optimization round (bench.py remains
+the round-record instrument).
 
 Usage: python tools/time_queries.py [--reps 3] [--sf DIR] q1 q2 ...
 """
 
 from __future__ import annotations
 
-import gc
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
-from mit6_5840_6_824_lab1_mapreduce_spark.queries import REGISTRY
-from mit6_5840_6_824_lab1_mapreduce_spark.session import (
-    get_spark,
-    warm_python_worker_pool,
-)
+from bench import time_query, warm_up
+from mit6_5840_6_824_lab1_mapreduce_spark.session import get_spark
 
 
 def main() -> None:
@@ -39,29 +32,10 @@ def main() -> None:
     names = argv
     spark = get_spark(app_name="time-queries")
     spark.sparkContext.setLogLevel("ERROR")
-
-    def force(df):
-        return (
-            df.select(F.xxhash64(*df.columns).alias("_h"))
-            .agg(F.bit_xor("_h"))
-            .collect()[0][0]
-        )
-
-    REGISTRY["tpch_q1_pricing_summary"].fn(spark, sf).count()
-    for n in names:
-        REGISTRY[n].fn(spark, "/root/testdata/sf0.001").count()
-    warm_python_worker_pool(spark)
+    warm_up(spark, sf, names)
     total = 0.0
     for n in names:
-        best = None
-        for _ in range(reps):
-            spark.catalog.clearCache()
-            gc.collect()
-            warm_python_worker_pool(spark)
-            t0 = time.perf_counter()
-            force(REGISTRY[n].fn(spark, sf))
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
+        best = min(time_query(spark, n, sf)[0] for _ in range(reps))
         total += best
         print(f"{n:40s} {best:7.3f}s")
     print(f"{'TOTAL':40s} {total:7.3f}s")
