@@ -23,15 +23,17 @@ The oracle replays the identical recurrence through chained CTEs.
 Reference analog: the iterative map(count pairs) → reduce(argmax) →
 map(rewrite) cycle is the repeated-job pattern the reference drives
 through its coordinator (`/root/reference/src/main/mrcoordinator.go`);
-here each round is one vocabulary-sized aggregate, and lineage is
-truncated per round like the CC/k-means loops (operators/graph.py,
-operators/similarity.py).
+here each round is one vocabulary-sized aggregate, and the rounds run
+on operators/loop.py's `iterate`, which truncates lineage per round
+like the CC, PageRank and k-means loops.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .loop import iterate, truncate
 
 # Symbol-sequence markers. Words are pre-filtered to ASCII [a-z], so
 # neither marker can collide with content. BOUND must stay two
@@ -55,12 +57,11 @@ def word_symseq(words: DataFrame, word_col: str = "word") -> DataFrame:
     )
 
 
-def _merge_search(a, b):  # '¦a·¦b·'
-    return F.concat_ws("", F.lit("¦"), a, F.lit(BOUND), b, F.lit("·"))
-
-
-def _merge_repl(a, b):  # '¦ab·'
-    return F.concat_ws("", F.lit("¦"), a, b, F.lit("·"))
+def _apply_merge(seq: DataFrame, a: str, b: str) -> DataFrame:
+    """Merge every greedy left-to-right occurrence of the symbol pair
+    (a, b) in ``symseq``: '¦a·¦b·' -> '¦ab·' (see module docstring)."""
+    rule = F.replace(F.col("symseq"), F.lit(f"¦{a}{BOUND}{b}·"), F.lit(f"¦{a}{b}·"))
+    return seq.withColumn("symseq", rule)
 
 
 def adjacent_pair_counts(seq: DataFrame, freq_col: str = "freq") -> DataFrame:
@@ -98,49 +99,42 @@ def bpe_learn_merges(words: DataFrame, n_merges: int) -> DataFrame:
     driver (the same loop-control scalar class as the CC loop's
     convergence count — BPE is driver-sequenced by nature, and the
     dry-run probe already pulled this row) and re-enters the rewrite
-    as two string literals; the sequence table is lineage-truncated
-    per round (lazy localCheckpoint, materialized by the next round's
-    aggregate), so plan depth stays constant across rounds. r12
+    as two string literals. The rounds run on operators/loop.py's
+    `iterate`: round i applies merge i and picks winner i+1, whose
+    aggregate materializes the round's lazily truncated sequence
+    table, so plan depth stays constant across rounds. r12
     optimization: the previous shape kept the winner as a 1-row
     checkpointed frame crossJoin-broadcast into the rewrite — one
     extra checkpoint + broadcast build per round whose only content
     the driver had already fetched for the dry-run probe; stage count
     per round drops to the one aggregate job.
     """
-    spark = words.sparkSession
-    schema = (
-        "merge_rank long, left_sym string, right_sym string, pair_count long"
-    )
-    seq = word_symseq(words).localCheckpoint(eager=False)
     learned: list[tuple[int, str, str, int]] = []
-    for rank in range(1, n_merges + 1):
+
+    def pick(seq: DataFrame) -> bool:
+        """Record the next winner; true once n_merges are learned or
+        the candidates run dry (every word fully merged)."""
         # Top-1 via TakeOrderedAndProject (map-side partial top-k);
-        # the collect doubles as the dry-run probe. Candidates can run
-        # dry before n_merges (every word fully merged): stop cleanly
-        # with the rules learned so far.
+        # the collect doubles as the dry-run probe.
         rows = (
             adjacent_pair_counts(seq)
             .orderBy(F.desc("pair_count"), "left_sym", "right_sym")
             .limit(1)
             .collect()
         )
-        if not rows:
-            break
-        a, b, cnt = (
-            rows[0]["left_sym"],
-            rows[0]["right_sym"],
-            rows[0]["pair_count"],
-        )
-        learned.append((rank, a, b, cnt))
-        if rank < n_merges:
-            seq = seq.withColumn(
-                "symseq",
-                F.replace(
-                    F.col("symseq"),
-                    _merge_search(F.lit(a), F.lit(b)),
-                    _merge_repl(F.lit(a), F.lit(b)),
-                ),
-            ).localCheckpoint(eager=False)
+        if rows:
+            learned.append((len(learned) + 1, *rows[0]))
+        return not rows or len(learned) == n_merges
+
+    def merge(seq: DataFrame) -> DataFrame:  # the last recorded rule
+        return _apply_merge(seq, *learned[-1][1:3])
+
+    # The initial sequence is truncated too: the first pick
+    # materializes it, and round 1 then reads it instead of
+    # tokenizing `words` a second time.
+    seq = truncate(word_symseq(words))
+    if n_merges > 0 and not pick(seq):
+        iterate("bpe_learn_merges", seq, merge, n_merges - 1, done=pick)
     # Arrow local frame, not createDataFrame(list): the list path
     # parallelizes into one Python-backed partition per core, and the
     # first action over the merges table then pays ~32 Python worker
@@ -148,7 +142,8 @@ def bpe_learn_merges(words: DataFrame, n_merges: int) -> DataFrame:
     # in session.local_rows_df).
     from ..session import local_rows_df
 
-    return local_rows_df(spark, learned, schema)
+    schema = "merge_rank long, left_sym string, right_sym string, pair_count long"
+    return local_rows_df(words.sparkSession, learned, schema)
 
 
 def bpe_segment(seq_words: DataFrame, merges: DataFrame) -> DataFrame:
@@ -157,18 +152,7 @@ def bpe_segment(seq_words: DataFrame, merges: DataFrame) -> DataFrame:
     n_merges rows by construction) into chained substring replaces.
     Returns (word, symseq) with all merges applied — the trained
     tokenizer's segmentation of each vocabulary word."""
-    rules = [
-        (r["left_sym"], r["right_sym"])
-        for r in merges.orderBy("merge_rank").collect()
-    ]
     out = seq_words
-    for a, b in rules:
-        out = out.withColumn(
-            "symseq",
-            F.replace(
-                F.col("symseq"),
-                F.lit(f"¦{a}{BOUND}{b}·"),
-                F.lit(f"¦{a}{b}·"),
-            ),
-        )
+    for r in merges.orderBy("merge_rank").collect():
+        out = _apply_merge(out, r["left_sym"], r["right_sym"])
     return out

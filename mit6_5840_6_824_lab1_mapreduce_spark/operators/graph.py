@@ -7,15 +7,17 @@ each round is a join + aggregate (both hash-partitioned by vertex),
 and the loop runs until no label changes — ≤ graph-diameter rounds.
 Near-dup graphs are forests of tiny cliques, so the diameter is small
 and the per-round shuffle is proportional to the edge count, never
-quadratic. Labels persist per round and the previous round is
-unpersisted (bounded storage); convergence is checked with a count()
+quadratic. The rounds run on operators/loop.py's `iterate`, which
+truncates lineage per round; convergence is checked with a count()
 on changed labels (the only driver-side value — a scalar).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .loop import iterate, truncate
 
 
 def connected_components(
@@ -48,35 +50,21 @@ def connected_components(
         .distinct()
         .persist()
     )
-    # localCheckpoint rather than persist: an iterative loop must
-    # TRUNCATE lineage each round or the logical plan doubles per
-    # iteration (labels appears twice per round) and planning itself
-    # OOMs after ~15 rounds. Checkpointed partitions live on the
-    # executors; the driver only ever sees the scalar `changed` count.
-    # LAZY (r12): the first round's convergence count is the action
-    # that materializes it — an eager checkpoint here was one more
-    # job launch per call for partitions that round 1 reads anyway.
-    #
-    # Round 1 is FUSED into initialization: with identity labels the
-    # first propagate's join degenerates to min(src) per dst, so pay
-    # one aggregate here and skip a full join+checkpoint+count round
-    # trip (round-5 perf item — one fewer iteration on every call).
-    # Only edge-endpoint vertices iterate; the singleton majority (in
-    # a near-dup graph, almost everything) never enters the loop and
-    # is unioned back at the end as its own component. At corpus scale
-    # this shrinks every per-round shuffle from |V| to |V_with_edges|.
-    # The adjacency is SYMMETRIC, so groupBy(dst) already covers every
-    # endpoint vertex — the r05-r11 shape's separate active-vertex
-    # distinct + left join against this aggregate produced exactly the
-    # same rows for one more shuffle and an extra join (removed r12).
-    labels = (
+    # Truncated, LAZILY (r12): the first round's convergence count
+    # materializes it. Round 1 is FUSED into initialization: with
+    # identity labels the first propagate's join degenerates to
+    # min(src) per dst, so one aggregate here saves a whole round
+    # (round-5 perf item). Only edge endpoints iterate; the singleton
+    # majority of a near-dup graph is unioned back at the end, which
+    # shrinks every per-round shuffle from |V| to |V_with_edges|. The
+    # adjacency is symmetric, so groupBy(dst) covers every endpoint.
+    labels = truncate(
         adj.groupBy(F.col("dst").alias("id"))
         .agg(F.min("src").alias("nbr_component"))
         .select(
             "id",
             F.least(F.col("id"), F.col("nbr_component")).alias("component"),
         )
-        .localCheckpoint(eager=False)
     )
 
     def propagate(lbl: DataFrame) -> DataFrame:
@@ -100,50 +88,34 @@ def connected_components(
             (nxt != F.col("component")).alias("_chg"),
         )
 
-    changed = -1  # sentinel: max_iter=0 reaches the for-else with no rounds run
-    try:
-        for _ in range(max_iter):
-            # ONE propagation step per checkpointed round. (A doubled
-            # step — two joins per checkpoint to halve the per-round
-            # job count — was measured 50% SLOWER at bench scale: the
-            # deeper per-round lineage costs more than the saved job
-            # launches. Keep the loop shape simple.) The checkpoint is
-            # LAZY: the convergence count is the action that
-            # materializes it, so each round launches one job, not two
-            # (an eager checkpoint ran its own job and the count a
-            # second — measured round-6, the extra launch was pure
-            # overhead since the count touches every partition anyway).
-            new_labels = propagate(labels).localCheckpoint(eager=False)
-            changed = new_labels.where("_chg").count()
-            labels = new_labels.drop("_chg")
-            if changed == 0:
-                break
-        else:
-            # exhausted max_iter with labels still moving: the result is
-            # a PARTIAL propagation, not components — callers on a deeper
-            # graph must not mistake it for converged output
-            raise RuntimeError(
-                f"connected_components did not converge within {max_iter} "
-                f"iterations ({changed} labels still changing); raise "
-                "max_iter (diameter of the pair graph exceeds it)"
-            )
+    # ONE propagation step per round. (A doubled step — two joins per
+    # checkpoint to halve the per-round job count — was measured 50%
+    # SLOWER at bench scale: the deeper per-round lineage costs more
+    # than the saved job launches.) The convergence count is each
+    # round's one job.
+    labels = iterate(
+        "connected_components", labels, propagate, max_iter,
+        done=lambda lbl: lbl.where("_chg").count() == 0, cached=(adj,),
+    ).drop("_chg")
+    singletons = vertices.join(labels.select("id"), "id", "left_anti").select(
+        "id", F.col("id").alias("component")
+    )
+    return labels.unionByName(singletons)
 
-        singletons = (
-            vertices.join(labels.select("id"), "id", "left_anti")
-            .select("id", F.col("id").alias("component"))
-        )
-        return labels.unionByName(singletons)
-    finally:
-        # runs on the non-convergence raise too — the persisted
-        # adjacency table must not outlive the call
-        adj.unpersist()
+
+# PageRank truncates every 4th round (and the last), not every round.
+# Measured reason: sf0.1, local[4], 6 alternating runs each, 28 jobs
+# per graph_pagerank_nations call either way but a median of 6.86 s
+# against 7.32 s truncating every round. It did not reproduce later on
+# a 4-vCPU host (same sf and master, 30 alternating pairs in three
+# sets): truncating every round won 23 pairs and had the lower median
+# in each set, so the cadence is due to be re-judged. Plan depth
+# between truncations stays bounded at 4 joins either way.
+_PAGERANK_TRUNCATE_EVERY = 4
 
 
 def weighted_pagerank(
-    edges: DataFrame,
-    n_iter: int = 5,
-    scale: int = 1_000_000,
-    truncate_every: int = 4,
+    edges: DataFrame, n_iter: int = 5, scale: int = 1_000_000
 ) -> DataFrame:
     """Weighted PageRank, damping 0.85, FIXED iteration count, exact
     integer arithmetic: ranks are scaled integers (start = `scale`),
@@ -159,19 +131,12 @@ def weighted_pagerank(
     rank_scaled). Per round: one join keyed on src (adjacency cached
     co-partitioned) + one aggregate by dst — edge-count-proportional
     shuffles, the same shape GraphX/Pregel lowers to. Lineage is
-    truncated every `truncate_every` rounds (`localCheckpoint`; see
-    below — the CC loop truncates per round, this op amortizes).
+    truncated every `_PAGERANK_TRUNCATE_EVERY` rounds by
+    operators/loop.py's `iterate`, which also materializes the final
+    ranks before the cached adjacency is unpersisted.
     int64 headroom: rank mass is bounded by |V|*scale, so
     rank*weight needs |V|*scale*max_w < 2^63 — at web scale move
     `scale` down or the contribution column to decimal(38,0).
-
-    ``truncate_every``: lineage is truncated (eager localCheckpoint)
-    every k rounds instead of every round (round-6 measurement: each
-    eager checkpoint is a full job launch, which DOMINATED the fixed
-    5-round run on a dimension-sized graph). Plan depth between
-    truncations stays bounded at k joins — safe at any scale — and
-    the FINAL ranks are always checkpointed so the returned frame is
-    materialized before the cached adjacency is unpersisted.
     """
     # Out-weight via a window over the SAME src shuffle the adjacency
     # cache needs anyway (r12 optimization round): the r05-r11 shape
@@ -180,8 +145,6 @@ def weighted_pagerank(
     # sum-over-partition window on the repartitioned edges attaches
     # `ow` in the same exchange — one pass, identical values (integer
     # sum, order-free).
-    from pyspark.sql import Window
-
     adj = (
         edges.select("src", "dst", F.col("weight").alias("w"))
         .repartition("src")
@@ -195,41 +158,28 @@ def weighted_pagerank(
         .persist()
     )
     base = int(0.15 * scale)
-    # LAZY initial checkpoint (r12): the first eager truncation below
-    # materializes it; plan depth until then is bounded by
-    # truncate_every rounds. The r05-r11 eager form launched one more
-    # job per call purely to materialize an identity projection.
-    # Degenerate n_iter < 1 (ADVICE r12): the loop never runs, so the
-    # initial ranks ARE the final ranks — checkpoint eagerly to honor
-    # the contract that the returned frame is materialized before the
-    # cached adjacency is unpersisted in the finally block.
-    ranks = nodes.select(
-        "node", F.lit(scale).cast("long").alias("r")
-    ).localCheckpoint(eager=(n_iter < 1))
-    try:
-        for i in range(n_iter):
-            contrib = (
-                adj.join(ranks, adj.src == ranks.node)
-                .select(F.col("dst").alias("node"), F.expr("(r * w) div ow").alias("c"))
-                .groupBy("node")
-                .agg(F.sum("c").alias("inflow"))
-            )
-            ranks = nodes.join(contrib, "node", "left").select(
-                "node",
-                (
-                    F.lit(base).cast("long")
-                    + F.expr("(85 * coalesce(inflow, 0L)) div 100")
-                ).alias("r"),
-            )
-            if (i + 1) % truncate_every == 0 or i == n_iter - 1:
-                # Intermediate truncations are LAZY (materialized by
-                # whatever computes through them — plan depth stays
-                # bounded either way); only the FINAL ranks checkpoint
-                # is eager, honoring the contract that the returned
-                # frame is materialized before the cached adjacency is
-                # unpersisted in the finally block.
-                ranks = ranks.localCheckpoint(eager=(i == n_iter - 1))
-        return ranks.select("node", F.col("r").alias("rank_scaled"))
-    finally:
-        adj.unpersist()
-        nodes.unpersist()
+
+    def step(ranks: DataFrame) -> DataFrame:
+        contrib = (
+            adj.join(ranks, adj.src == ranks.node)
+            .select(F.col("dst").alias("node"), F.expr("(r * w) div ow").alias("c"))
+            .groupBy("node")
+            .agg(F.sum("c").alias("inflow"))
+        )
+        return nodes.join(contrib, "node", "left").select(
+            "node",
+            (
+                F.lit(base).cast("long")
+                + F.expr("(85 * coalesce(inflow, 0L)) div 100")
+            ).alias("r"),
+        )
+
+    # The initial ranks are truncated too (lazily, r12): a
+    # graph_pagerank_nations call launched 28 jobs with it and 32
+    # without (sf0.01, local[4]).
+    ranks = truncate(nodes.select("node", F.lit(scale).cast("long").alias("r")))
+    ranks = iterate(
+        "weighted_pagerank", ranks, step, n_iter,
+        every=_PAGERANK_TRUNCATE_EVERY, cached=(adj, nodes),
+    )
+    return ranks.select("node", F.col("r").alias("rank_scaled"))

@@ -21,6 +21,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .loop import iterate
+
 SCALE = 1_000_000
 N_PLANES = 8
 
@@ -355,16 +357,13 @@ def kmeans_step(v: DataFrame, centroids: DataFrame) -> DataFrame:
 
 
 def kmeans_train(v: DataFrame, n_seeds: int = 8, n_iter: int = 1) -> DataFrame:
-    """n_iter Lloyd steps from deterministic seeds. Like the
-    connected-components loop, each round truncates lineage
-    (localCheckpoint on the k-row centroid table — k rows, so the
-    checkpoint is trivially small) so the plan does not grow with
+    """n_iter Lloyd steps from deterministic seeds, run by
+    operators/loop.py's `iterate`: each round lazily truncates the
+    k-row centroid table's lineage, so the plan does not grow with
     n_iter; the corpus is only ever traversed by the per-round
     assign + mean jobs."""
-    c = seed_centroids(v, n_seeds)
-    for _ in range(n_iter):
-        c = kmeans_step(v, c).localCheckpoint()
-    return c
+    c0 = seed_centroids(v, n_seeds)
+    return iterate("kmeans_train", c0, lambda c: kmeans_step(v, c), n_iter)
 
 
 def ivf_refined_centroids(v: DataFrame, n_seeds: int = 8) -> DataFrame:

@@ -68,40 +68,6 @@ def test_components_max_iter_zero_raises_runtime_error(spark):
         connected_components(verts, edges, max_iter=0)
 
 
-def test_pagerank_stride_is_output_invariant(spark):
-    """The lineage-truncation stride (round-6 perf change) is pure
-    bookkeeping: truncating every round, every 4th round, or only at
-    the end must produce bit-identical ranks — the recurrence is
-    integer-exact, so ANY divergence means the stride dropped or
-    reordered a materialization. Covers n_iter not divisible by the
-    stride (5 % 4 != 0) and stride > n_iter (final-round-only)."""
-    from mit6_5840_6_824_lab1_mapreduce_spark.operators.graph import (
-        weighted_pagerank,
-    )
-
-    edges = spark.createDataFrame(
-        [
-            Row(src=1, dst=2, weight=3),
-            Row(src=2, dst=3, weight=1),
-            Row(src=3, dst=1, weight=2),
-            Row(src=1, dst=3, weight=5),
-            Row(src=4, dst=1, weight=7),  # source-only node
-        ]
-    )
-
-    def ranks(truncate_every):
-        return {
-            r.node: r.rank_scaled
-            for r in weighted_pagerank(
-                edges, n_iter=5, truncate_every=truncate_every
-            ).collect()
-        }
-
-    base = ranks(1)
-    assert ranks(4) == base
-    assert ranks(100) == base
-
-
 def test_pagerank_mass_and_floor_bounds(spark):
     """Integer PageRank invariants: every rank >= the damping base
     (0.15 * scale); total mass never exceeds the initial |V| * scale
