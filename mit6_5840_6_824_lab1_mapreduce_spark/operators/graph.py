@@ -103,17 +103,6 @@ def connected_components(
     return labels.unionByName(singletons)
 
 
-# PageRank truncates every 4th round (and the last), not every round.
-# Measured reason: sf0.1, local[4], 6 alternating runs each, 28 jobs
-# per graph_pagerank_nations call either way but a median of 6.86 s
-# against 7.32 s truncating every round. It did not reproduce later on
-# a 4-vCPU host (same sf and master, 30 alternating pairs in three
-# sets): truncating every round won 23 pairs and had the lower median
-# in each set, so the cadence is due to be re-judged. Plan depth
-# between truncations stays bounded at 4 joins either way.
-_PAGERANK_TRUNCATE_EVERY = 4
-
-
 def weighted_pagerank(
     edges: DataFrame, n_iter: int = 5, scale: int = 1_000_000
 ) -> DataFrame:
@@ -131,9 +120,9 @@ def weighted_pagerank(
     rank_scaled). Per round: one join keyed on src (adjacency cached
     co-partitioned) + one aggregate by dst — edge-count-proportional
     shuffles, the same shape GraphX/Pregel lowers to. Lineage is
-    truncated every `_PAGERANK_TRUNCATE_EVERY` rounds by
-    operators/loop.py's `iterate`, which also materializes the final
-    ranks before the cached adjacency is unpersisted.
+    truncated every round by operators/loop.py's `iterate`, which also
+    materializes the final ranks before the cached adjacency is
+    unpersisted.
     int64 headroom: rank mass is bounded by |V|*scale, so
     rank*weight needs |V|*scale*max_w < 2^63 — at web scale move
     `scale` down or the contribution column to decimal(38,0).
@@ -178,8 +167,5 @@ def weighted_pagerank(
     # graph_pagerank_nations call launched 28 jobs with it and 32
     # without (sf0.01, local[4]).
     ranks = truncate(nodes.select("node", F.lit(scale).cast("long").alias("r")))
-    ranks = iterate(
-        "weighted_pagerank", ranks, step, n_iter,
-        every=_PAGERANK_TRUNCATE_EVERY, cached=(adj, nodes),
-    )
+    ranks = iterate("weighted_pagerank", ranks, step, n_iter, cached=(adj, nodes))
     return ranks.select("node", F.col("r").alias("rank_scaled"))

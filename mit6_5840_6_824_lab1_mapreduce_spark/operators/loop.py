@@ -30,19 +30,18 @@ def truncate(frame: DataFrame, eager: bool = False) -> DataFrame:
 
 def iterate(
     name: str, state: DataFrame, advance: Callable[[DataFrame], DataFrame], rounds: int,
-    *, done: Callable[[DataFrame], bool] | None = None, every: int = 1,
+    *, done: Callable[[DataFrame], bool] | None = None,
     cached: tuple[DataFrame, ...] = (),
 ) -> DataFrame:
     """Run up to `rounds` rounds of ``state = advance(state)``.
 
-    Each round truncates the new state lazily (every `every` rounds and
-    at the last), then asks `done(state)`, whose action materializes
-    the checkpoint. With `done` the loop stops at the first true answer
-    and raises RuntimeError if none came within `rounds` (at once for
-    ``rounds == 0``): a partial result must not pass for a converged
-    one. `cached` inputs are unpersisted on the way out, error or not;
-    the returned frame must not read them, so without `done` the last
-    checkpoint is eager when there are any.
+    Each round truncates the new state lazily, then asks `done(state)`,
+    whose action materializes the checkpoint. With `done` the loop stops
+    at the first true answer and raises RuntimeError if none came within
+    `rounds` (at once for ``rounds == 0``): a partial result must not
+    pass for a converged one. `cached` inputs are unpersisted on the way
+    out, error or not; the returned frame must not read them, so without
+    `done` the last checkpoint is eager when there are any.
 
     A round's jobs run under the description ``"<name> round <i>"``
     (the caller's comes back afterwards), and an exception raised in a
@@ -55,9 +54,7 @@ def iterate(
         for i in range(1, rounds + 1):
             sc.setJobDescription(f"{name} round {i}")
             try:
-                state = advance(state)
-                if i % every == 0 or i == rounds:
-                    state = truncate(state, eager=eager_last and i == rounds)
+                state = truncate(advance(state), eager=eager_last and i == rounds)
                 if done is not None and done(state):
                     return state
             except Exception as e:

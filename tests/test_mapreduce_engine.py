@@ -12,6 +12,7 @@ from mit6_5840_6_824_lab1_mapreduce_spark.operators.mapreduce import (
     run_job,
     run_job_combining,
     run_sequential,
+    whole_text_input,
 )
 
 CORPUS = [
@@ -34,6 +35,41 @@ def test_fnv1a_known_vectors():
     assert fnv1a32("a") == 0xE40C292C
     assert fnv1a32("foobar") == 0xBF9CF968
     assert 0 <= reduce_bucket("anything", 10) < 10
+
+
+def test_reduce_bucket_cache_is_keyed_on_n_reduce():
+    # One key under several n in a row: a memo keyed on the key alone
+    # would answer every n after the first with the first's bucket.
+    key = "straße"
+    for n in (7, 10, 3, 10, 1 << 20, 7):
+        assert reduce_bucket(key, n) == (fnv1a32(key) & 0x7FFFFFFF) % n
+
+
+def _file_corpus(root) -> str:
+    # 16 files of one size: wholeTextFiles packs whole files into splits,
+    # so equal sizes make the split count exactly the requested minimum.
+    body = " ".join(text for _, text in CORPUS)
+    for i in range(16):
+        (root / f"pg-{i:02}.txt").write_text(f"{body} file{i:02}", encoding="utf-8")
+    return str(root / "pg-*.txt")
+
+
+def test_whole_text_input_uses_every_core(spark, tmp_path):
+    """Spark's own ``wholeTextFiles`` default is 2 splits whatever the
+    core count; the map stage gets ``defaultParallelism`` tasks."""
+    glob = _file_corpus(tmp_path)
+    assert whole_text_input(spark, glob).getNumPartitions() == (
+        spark.sparkContext.defaultParallelism
+    )
+    assert whole_text_input(spark, glob, min_partitions=1).getNumPartitions() == 1
+
+
+def test_file_corpus_matches_sequential(spark, tmp_path):
+    glob = _file_corpus(tmp_path)
+    inputs = whole_text_input(spark, glob)
+    m, r = mrapps.APPS["wc"]
+    got = sorted(run_job(inputs, m, r, n_reduce=5).collect())
+    assert got == sorted(run_sequential(inputs.collect(), m, r))
 
 
 def test_wc_distributed_matches_sequential(spark):

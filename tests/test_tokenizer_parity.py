@@ -62,6 +62,20 @@ def _go_is_letter_tokens(text: str) -> list[str]:
     return out
 
 
+def test_isalpha_fast_path_is_exactly_category_letter():
+    """``tokenize_py`` keeps a run whole when ``str.isalpha()`` holds, so
+    that must be category L* (Go IsLetter) for every code point, and
+    runs the pre-segmenter admits with Nl/No in them must still split."""
+    bad = [
+        hex(c)
+        for c in range(0x110000)
+        if chr(c).isalpha() != unicodedata.category(chr(c)).startswith("L")
+    ]
+    assert bad == []
+    assert tokenize_py("aⅧb") == ["a", "b"]
+    assert tokenize_py("x½y ③z") == ["x", "y", "z"]
+
+
 def test_python_tokenizer_matches_go_model_curated():
     for text in CURATED:
         assert tokenize_py(text) == _go_is_letter_tokens(text), repr(text)
