@@ -93,10 +93,15 @@ def run_job_combining(
 
     The reference ships one ``(word, "1")`` pair per occurrence with no
     combiner (wc.go:26-31); this is the Spark improvement that makes the
-    same job viable at 100 TB (shuffle volume ∝ distinct keys, not
-    occurrences). Keys land in the same FNV-1a buckets as ``run_job``;
-    the map side combines first, so the hash runs once per distinct key
-    per map partition, not once per occurrence.
+    same job viable at 100 TB. Each map task ships one partial per
+    distinct key it saw, so shuffle volume scales with distinct keys ×
+    map tasks, not with occurrences: on the 1.5 MB ``mr_corpus`` corpus
+    (local[4]), going from 6 to 12 map tasks per traced run took
+    ``shuffle.write_records`` from 780 to 1,400 and the ``wc`` combining
+    reduce stage from a median 297 to 349 ms. Keys land in the same
+    FNV-1a buckets as ``run_job``; the map side combines first, so the
+    hash runs once per distinct key per map partition, not once per
+    occurrence.
     """
     pairs = inputs.flatMap(lambda fc: map_fn(fc[0], fc[1]))
     return pairs.reduceByKey(

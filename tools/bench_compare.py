@@ -2,36 +2,32 @@
 
 Usage:
     python tools/bench_compare.py BENCH_FULL_r05.json BENCH_FULL_r06.json
-    python tools/bench_compare.py <old> <new> --threshold 1.25 --canary
+    python tools/bench_compare.py <old> <new> --threshold 1.25
 
 Prints regressions (new/old >= threshold), improvements (<= 1/threshold),
 and the suite totals. Full-suite timings are ordering-sensitive — treat
-a flagged query as a candidate for an isolated cold re-measure (see
-SCALE.md §Cold re-measures), not as a confirmed regression.
+a flagged query as a candidate for an isolated cold re-measure
+(``tools/cold_isolate.py``; SCALE.md §Cold re-measures), not as a
+confirmed regression. Each regression row shows the new record's host
+stamp for that query (``bench.host_stamp``: steal and other processes'
+CPU seconds while it was timed), so a contended reading reads as one.
 
-``--canary`` divides every new/old ratio by the machine factor
-(new canary / old canary), so a uniformly slower or faster session
-doesn't read as a code change. The divisor uses min(start, mid, end)
-per file, NOT the start reading alone: both the r08 and r09 twin runs
-measured the start canary ~1.67x above the same session's mid/end
-minima (the JVM is still JIT-compiling the canary workload itself at
-the start point — spread 1.674 vs 1.683, same shape on two different
-machines), so start/start normalization carries up to +-30% while the
-session-minimum is the stable floor contention can only push UP from.
+Warns when the two records differ in scale factor or machine stamp
+(``bench.record_stamp``: core count, pyspark and Python versions) —
+their ratios then compare different data or different machines.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import statistics
+import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-def _canary_floor(doc: dict) -> float | None:
-    """min(start, mid, end) — the session's JIT-warm canary floor."""
-    c = doc.get("canary") or {}
-    pts = [c[k] for k in ("start", "mid", "end") if isinstance(c.get(k), (int, float))]
-    return min(pts) if pts else None
+from bench import record_stamp
 
 
 def main() -> None:
@@ -39,12 +35,6 @@ def main() -> None:
     p.add_argument("old_file")
     p.add_argument("new_file")
     p.add_argument("--threshold", type=float, default=1.25)
-    p.add_argument(
-        "--canary",
-        action="store_true",
-        help="normalize ratios by the canary machine factor "
-        "(min-of-three per file; see module docstring)",
-    )
     ns = p.parse_args()
     thr = ns.threshold
     old_doc = json.load(open(ns.old_file))
@@ -56,44 +46,20 @@ def main() -> None:
             f"WARNING: scale factors differ ({old_doc.get('sf')} vs "
             f"{new_doc.get('sf')}) — ratios below compare different data sizes"
         )
-    mf = 1.0
-    if ns.canary:
-        fo, fn_ = _canary_floor(old_doc), _canary_floor(new_doc)
-        if fo and fn_:
-            mf = fn_ / fo
-            print(
-                f"canary machine factor: {mf:.3f} "
-                f"(floors {fo:.3f}s -> {fn_:.3f}s; ratios below are "
-                f"divided by this)"
-            )
-        else:
-            print("WARNING: --canary requested but a file lacks canary "
-                  "readings — ratios are raw")
+    if record_stamp(old_doc) != record_stamp(new_doc):
+        print(
+            f"WARNING: machine stamps differ ({record_stamp(old_doc)} vs "
+            f"{record_stamp(new_doc)}) — ratios below compare different machines"
+        )
     old = old_doc["queries"]
     new = new_doc["queries"]
-
-    # Retry stamps (ADVICE r11): a committed value that is the MIN of
-    # two readings (the outlier-retry protocol) is best-of-2 while
-    # never-flagged queries carry single readings — mark those rows so
-    # cross-round deltas on them are read with the stamped pair.
-    def _retry_mark(doc: dict, name: str) -> str:
-        stamp = (doc.get("retries") or {}).get(name)
-        if not isinstance(stamp, dict):
-            return ""
-        if "skipped" in stamp:
-            return f" [retry SKIPPED, first={stamp.get('first')}]"
-        if "error" in stamp:
-            return f" [retry ERRORED, first={stamp.get('first')}]"
-        return (f" [retry-min: first={stamp.get('first')}"
-                f" retry={stamp.get('retry')}]")
+    hosts = new_doc.get("host") or {}
 
     both = sorted(set(old) & set(new))
     print(f"overlap {len(both)} queries; "
           f"sum {sum(old[k] for k in both):.1f}s -> "
-          f"{sum(new[k] for k in both):.1f}s"
-          + (f" raw ({sum(new[k] for k in both) / mf:.1f}s normalized)"
-             if mf != 1.0 else ""))
-    rows = [(k, old[k], new[k], new[k] / old[k] / mf) for k in both if old[k] > 0]
+          f"{sum(new[k] for k in both):.1f}s")
+    rows = [(k, old[k], new[k], new[k] / old[k]) for k in both if old[k] > 0]
     med = statistics.median(r[3] for r in rows) if rows else float("nan")
     print(f"median per-query ratio: {med:.3f}")
     regs = sorted((r for r in rows if r[3] >= thr), key=lambda r: -r[3])
@@ -101,23 +67,10 @@ def main() -> None:
     for title, group in (("regressions", regs), ("improvements", imps)):
         print(f"{title} (x{thr:.2f}): {len(group)}")
         for k, o, n, r in group[:20]:
-            marks = ""
-            for side, doc in (("old", old_doc), ("new", new_doc)):
-                m = _retry_mark(doc, k)
-                if m:
-                    marks += f" {side}:{m.strip()}"
-            print(f"  {r:5.2f}x  {o:7.2f} -> {n:7.2f}  {k}{marks}")
-    new_stamps = new_doc.get("retries") or {}
-    n_min = sum(1 for v in new_stamps.values()
-                if isinstance(v, dict) and "retry" in v)
-    n_other = len(new_stamps) - n_min
-    if new_stamps:
-        note = (f"note: {n_min} queries in {ns.new_file} carry retry stamps "
-                "(committed value = min of two readings)")
-        if n_other:
-            note += (f"; {n_other} more were flagged but NOT adjudicated "
-                     "(budget-skipped or errored — single first reading)")
-        print(note)
+            h = hosts.get(k) if title == "regressions" else None
+            mark = (f"  [steal {h['steal_s']:.2f}s other_cpu {h['other_cpu_s']:.2f}s]"
+                    if h else "")
+            print(f"  {r:5.2f}x  {o:7.2f} -> {n:7.2f}  {k}{mark}")
     only_old = sorted(set(old) - set(new))
     only_new = sorted(set(new) - set(old))
     if only_old:

@@ -16,8 +16,10 @@ Usage:
     python tools/cold_isolate.py <query> [<query> ...] [--runs 3]
                                  [--sf-dir /root/testdata/sf0.1]
 
-Each run prints `COLD <name>: <sec>s rows=<n>`; the parent prints a
-per-query min/median summary. Keep the machine otherwise idle.
+Each run prints `COLD <name>: <sec>s rows=<n> steal=<s>s other_cpu=<s>s`
+(the run's host stamp, ``bench.host_stamp``); the parent prints a
+per-query min/median summary. Keep the machine otherwise idle: a run
+whose other_cpu reads a sizeable share of its seconds was contended.
 """
 
 from __future__ import annotations
@@ -41,8 +43,9 @@ name, sf = {name!r}, {sf!r}
 spark = get_spark(app_name="cold-iso")
 spark.sparkContext.setLogLevel("ERROR")
 warm_up(spark, sf, [name])
-sec, rows = time_query(spark, name, sf)
-print(f"COLD {{name}}: {{sec:.3f}}s rows={{rows}}")
+sec, rows, host = time_query(spark, name, sf)
+print(f"COLD {{name}}: {{sec:.3f}}s rows={{rows}} "
+      f"steal={{host['steal_s']:.2f}}s other_cpu={{host['other_cpu_s']:.2f}}s")
 spark.stop()
 """
 

@@ -253,7 +253,7 @@ def main() -> None:
             # on local[4], below the 0.1 MB rounding.
             group = f"scale-smoke:{sf_name}:{name}"
             spark.sparkContext.setJobGroup(group, name)
-            dt, rows = time_query(spark, name, sf_dir)
+            dt, rows, host = time_query(spark, name, sf_dir)
             stages = reader.read(group)
             read_mb = stages["shuffle_read_bytes"] / 1e6
             write_mb = stages["shuffle_write_bytes"] / 1e6
@@ -262,6 +262,7 @@ def main() -> None:
                 "rows": rows,
                 "shuffle_read_mb": round(read_mb, 1),
                 "shuffle_write_mb": round(write_mb, 1),
+                **host,
             }
             print(f"{sf_name} {name}: {dt:.1f}s rows={rows} "
                   f"shufW={write_mb:.1f}MB", flush=True)

@@ -1,5 +1,6 @@
 """Bench-methodology timing for a list of registered queries: bench.py's
-own warm-up, between-query reset and forcing action, min of N reps.
+own warm-up, between-query reset and forcing action, min of N reps,
+printed with the host stamp of the kept rep.
 For A/B measurement during the optimization round (bench.py remains
 the round-record instrument).
 
@@ -35,9 +36,12 @@ def main() -> None:
     warm_up(spark, sf, names)
     total = 0.0
     for n in names:
-        best = min(time_query(spark, n, sf)[0] for _ in range(reps))
+        best, _, host = min(
+            (time_query(spark, n, sf) for _ in range(reps)), key=lambda r: r[0]
+        )
         total += best
-        print(f"{n:40s} {best:7.3f}s")
+        print(f"{n:40s} {best:7.3f}s  steal {host['steal_s']:.2f}s"
+              f"  other_cpu {host['other_cpu_s']:.2f}s")
     print(f"{'TOTAL':40s} {total:7.3f}s")
     spark.stop()
 
